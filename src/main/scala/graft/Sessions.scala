@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** Session factory shared by Verify/Bench/tests: one place for the configs
@@ -11,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on: runtime coalescing, broadcast demotion, skew-join splitting;
   *  - UTC session time so timestamp semantics match the DuckDB oracle;
   *  - `nanosAsLong` so the ns-precision `events.ts` parquet column is
-  *    readable (converted to TimestampType in [[Tables.events]]).
+  *    readable (converted to TimestampType in [[Tables.events]]);
+  *  - the `WindowExec` logger at ERROR: its "No Partition Defined for
+  *    Window operation!" warning fires on every global window and buried
+  *    every other warning in the logs. PlanSpec's bounded-frame pins are
+  *    the guard against an unbounded single-partition window.
   */
 object Sessions {
   def local(cpus: String): SparkSession = {
@@ -44,6 +50,7 @@ object Sessions {
     })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark
   }
 }

@@ -109,12 +109,6 @@ object SpotifyPipeline {
       .where(col("artist_id").isNotNull)
       .dropDuplicates("artist_id", "album_id")
 
-  /** S18/S19 — the FK driver set for track extraction: sorted distinct
-    * album ids from the upstream album output (spotify_etl_v2.py:210-221).
-    */
-  def albumIdDriverSet(albums: DataFrame): DataFrame =
-    Ops.sortedDistinct(albums, "album_id")
-
   /** S20 — track projection, first-wins on track_id
     * (spotify_etl_v2.py:241-249). */
   def projectTracks(raw: DataFrame, fetchOrder: Column): DataFrame =

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -72,24 +73,17 @@ object EventStreams {
   /** Open a parquet DIRECTORY as the events stream (FileStreamSource tails
     * directories — new files appear as new micro-batch input, the layout a
     * landing zone actually has). `ts` is normalized to µs `TimestampType`
-    * exactly as [[graft.Tables.events]] does for batch — the fixture has
-    * shipped both nanos-as-long and `TIMESTAMP_NTZ` encodings, and
-    * `withWatermark` hard-rejects anything but `TIMESTAMP`
+    * by the same [[graft.Tables.normalizeEventTs]] the batch loader uses —
+    * the fixture has shipped both nanos-as-long and `TIMESTAMP_NTZ`
+    * encodings, and `withWatermark` hard-rejects anything but `TIMESTAMP`
     * (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE). `schemaFrom` points at any
-    * existing events parquet for the schema. */
+    * existing events parquet for the schema, resolved once per session by
+    * [[graft.Tables.schema]]. */
   def readEventsStream(spark: SparkSession, streamDir: String,
-                       schemaFrom: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val schema = spark.read.parquet(schemaFrom).schema
-    val df = spark.readStream.schema(schema)
+                       schemaFrom: String): DataFrame =
+    Tables.normalizeEventTs(spark.readStream.schema(Tables.schema(spark, schemaFrom))
       .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    schema("ts").dataType match {
-      case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => df
-    }
-  }
+      .parquet(streamDir))
 
   /** Tumbling-window event counts with a watermark bounding late data (and
     * therefore state size). */
