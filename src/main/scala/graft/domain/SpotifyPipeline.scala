@@ -13,7 +13,8 @@ import graft.operators.Ops
   * JSON through GCS (sp_airflow/dags/spotify_etl_v2.py:405-435); here each
   * stage is a `DataFrame => DataFrame` so Catalyst fuses, prunes, and
   * pushes down across stage boundaries, and the only materialization points
-  * are the sinks. API ingestion (pagination/retry/pacing,
+  * are the sinks, which [[runDaily]] runs concurrently on threads that
+  * inherit the caller's job group. API ingestion (pagination/retry/pacing,
   * spotify_etl_v2.py:36-49,116-157) is an out-of-engine client concern —
   * these transforms start from landed raw payloads.
   */
@@ -136,21 +137,19 @@ object SpotifyPipeline {
   // --------------------------------------------------------------- sinks
 
   /** S17/S23/S24 — partitioned columnar load: every entity written as
-    * Parquet under `ingest_date=<runDate>/`, append mode (the reference's
-    * date-prefixed GCS layout + BigQuery WRITE_APPEND,
+    * Parquet under `ingest_date=<runDate>/`, beside earlier dates (the
+    * reference's date-prefixed GCS layout + BigQuery WRITE_APPEND,
     * spotify_etl_v2.py:333-395). Dynamic partition overwrite makes daily
     * re-runs idempotent per partition instead of duplicating (the
     * reference's `if_generation_match` analog). */
   def writeEntity(df: DataFrame, outDir: String, entity: String,
-                  runDate: String, overwritePartition: Boolean = true): Unit = {
-    val mode = if (overwritePartition) SaveMode.Overwrite else SaveMode.Append
+                  runDate: String): Unit =
     df.withColumn("ingest_date", lit(runDate))
       .write
       .partitionBy("ingest_date")
       .option("partitionOverwriteMode", "dynamic")
-      .mode(mode)
+      .mode(SaveMode.Overwrite)
       .parquet(s"$outDir/$entity")
-  }
 
   /** The full transform stage: raw payload frames in, the 5 entity frames
     * out (one lazy plan each; nothing materialized until a sink runs). */
@@ -166,8 +165,19 @@ object SpotifyPipeline {
     * (spotify_etl_v2.py:405-435) as ONE Spark program: read the landed raw
     * JSON for `runDate`, transform, load all five entities partitioned by
     * ingest date. Each entity is a single lazy plan executed by its own
-    * sink action; Catalyst pipelines what Airflow serialized. Re-running a
-    * date is idempotent (dynamic partition overwrite). Raw layout:
+    * sink action; Catalyst pipelines what Airflow serialized.
+    *
+    * The five sinks do not depend on each other, so each runs on its own
+    * thread, started here and joined before return: the scheduler overlaps
+    * their single-task job chains and driver-side gaps on idle cores. The
+    * threads are created inside the call because Spark copies the creating
+    * thread's local properties (job group, scheduler pool) and active
+    * session into a new thread; a pre-built pool would run the writes
+    * outside the caller's job group, out of reach of `cancelJobGroup`.
+    * If any sink fails, the first failure is thrown with the others
+    * attached as suppressed, after every sink has finished. The sinks that
+    * succeeded keep their partition; re-running the date is idempotent
+    * (dynamic partition overwrite) and repairs it. Raw layout:
     * `$rawDir/{artist,album,track}.json` newline-delimited records.
     *
     * First-wins dedup order comes from `readLinesNumbered`'s
@@ -177,12 +187,25 @@ object SpotifyPipeline {
     * between environments for identical input files. */
   def runDaily(spark: org.apache.spark.sql.SparkSession, rawDir: String,
                outDir: String, runDate: String): Unit = {
+    import scala.jdk.CollectionConverters._
     import graft.sources.JsonArtifacts
     val rawArtists = JsonArtifacts.readLines(spark, s"$rawDir/artist.json", Schemas.rawArtist)
     val rawAlbums = JsonArtifacts.readLinesNumbered(spark, s"$rawDir/album.json", Schemas.rawAlbum)
     val rawTracks = JsonArtifacts.readLinesNumbered(spark, s"$rawDir/track.json", Schemas.rawTrack)
-    transform(rawArtists, rawAlbums, rawTracks, col("__fetch")).foreach {
-      case (entity, df) => writeEntity(df, outDir, entity, runDate)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val sinks = transform(rawArtists, rawAlbums, rawTracks, col("__fetch")).map {
+      case (entity, df) =>
+        val sink = new Thread(() =>
+          try writeEntity(df, outDir, entity, runDate)
+          catch { case t: Throwable => failures.add(t) },
+          s"runDaily $runDate $entity")
+        sink.start()
+        sink
+    }
+    sinks.foreach(_.join())
+    failures.asScala.toList match {
+      case first :: others => others.foreach(first.addSuppressed); throw first
+      case Nil =>
     }
   }
 }

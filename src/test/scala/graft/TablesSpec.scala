@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -10,7 +10,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -19,28 +18,10 @@ import org.apache.spark.sql.types._
   * a table in a session runs the parquet schema-inference job. */
 class TablesSpec extends SparkSuite {
 
-  /** Jobs started by `f` on this thread (and any thread that sets the same
-    * job group inside `f`), counted by a listener's `onJobStart`. A marker
-    * job run after `f` flushes the listener bus up to `f`'s last job. */
+  /** Jobs started by `f` in job group `group`. */
   private def jobsOf[A](group: String)(f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      val out = try f finally sc.clearJobGroup()
-      val marker = s"$group-marker"
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60.seconds.toNanos
-      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "listener never saw the marker job")
-      (out, groups.toArray.count(_ == group))
-    } finally sc.removeSparkListener(listener)
+    val (out, groups) = jobGroupsOf(group)(f)
+    (out, groups.count(_ == group))
   }
 
   private def tempDir(): String = Files.createTempDirectory("tables-spec").toString
