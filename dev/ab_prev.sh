@@ -5,7 +5,7 @@
 # question is "did the CODE get uniformly slower, or the HOST?" — which
 # anchor normalization cannot answer. This answers it directly: build
 # the previous round's closing commit in a worktree and run the same
-# whole-board sequential passes (graft.DevPasses) on it and on HEAD, on
+# whole-board sequential passes (graft.DevTime) on it and on HEAD, on
 # the current host. The code is exonerated iff the old code reads no
 # faster than HEAD (round 13: old 516-624 s vs HEAD 395-410 s on a host
 # whose archived baseline was 282 s).
@@ -36,13 +36,8 @@ PASSES=${2:-2}
 WT=/tmp/graft_ab_prev
 LOGDIR=$(mktemp -d /tmp/graft_ab_logs.XXXXXX)
 
-JOPTS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
---add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED \
---add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED \
---add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
---add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
---add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED \
---add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+# JDK 17 module opens for Spark outside sbt (the list build.sbt also reads)
+JOPTS=$(sed -e '/^#/d' -e '/^$/d' -e 's/.*/--add-opens &=ALL-UNNAMED/' dev/jdk17-add-opens.txt)
 
 compile() { # $1 = project dir, $2 = label — log to file, surface on failure
   local safe=${2//\//_}  # a ref like origin/main must not become a path
@@ -57,7 +52,7 @@ passes() { # $1 = project dir, $2 = label, $3 = optional query subset (csv)
   ( cd "$1" && java $JOPTS -Dspark.ui.enabled=false \
       -Dspark.sql.session.timeZone=UTC -Xmx"${SPARK_DRIVER_MEM:-8g}" \
       -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-      graft.DevPasses "${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" "$PASSES" ${3:+"$3"} \
+      graft.DevTime "${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" "${3:-all}" "$PASSES" \
       2>/dev/null | grep '^\[pass' | sed "s/^/[$2] /" )
 }
 
@@ -71,7 +66,7 @@ passes() { # $1 = project dir, $2 = label, $3 = optional query subset (csv)
 # glob sort here misordered r99 vs r100) and intersects the picks with
 # BOTH the current registry and the previous round's snapshot inventory,
 # logging drops, so a query added or renamed at HEAD can no longer kill
-# the ref worktree's DevPasses with an opaque require() failure.
+# the ref worktree's DevTime with an opaque require() failure.
 quick_subset() {
   java $JOPTS -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.QuickSubset .
@@ -110,7 +105,7 @@ board = ("~40-query stratified subset (wall-decile strata + plan-shape anchors)"
          if mode == "quick" else "whole-board")
 block = (f"\n### Round-{rnd} same-VM previous-commit A/B ({stamp}, mechanical, {mode})\n"
          f"\n`dev/ab_prev.sh {'--quick ' if mode == 'quick' else ''}{ref}` — "
-         f"{board} DevPasses sequential walls on the current host:\n"
+         f"{board} DevTime sequential walls on the current host:\n"
          f"- HEAD: {rng(hw)} (passes: {', '.join(f'{w:.1f}' for w in hw)})\n"
          f"- {ref}: {rng(rw)} (passes: {', '.join(f'{w:.1f}' for w in rw)})\n"
          f"- ratio min({ref})/min(HEAD) = {ratio:.2f}x "
@@ -153,8 +148,8 @@ PY
 echo "ab_prev: building $REF in $WT"
 git worktree remove --force "$WT" 2>/dev/null || true
 git worktree add "$WT" "$REF" >/dev/null
-# DevPasses may postdate the ref — carry the current tool into the worktree
-cp src/main/scala/graft/DevPasses.scala "$WT/src/main/scala/graft/DevPasses.scala"
+# DevTime may postdate the ref — carry the current tool into the worktree
+cp src/main/scala/graft/DevTime.scala "$WT/src/main/scala/graft/DevTime.scala"
 compile "$WT" "$REF"
 # HEAD must run the CURRENT code, not stale target/ classes — an sbt
 # compile is a no-op when fresh and cheap when not (ADVICE r13: an

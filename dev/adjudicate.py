@@ -9,7 +9,8 @@ script is that ritual, mechanically:
 
   1. wait for loadavg < --loadavg (default 0.5), up to --max-wait;
   2. run `graft.DevTime <sf-dir> <anchors>,<flags>` directly against
-     the compiled classes (min-of-2 warm, the adjudication primitive);
+     the compiled classes (min over 3 pass-major passes, the first one
+     cold — the adjudication primitive);
   3. band test per flag: divide the re-timed value by the MEDIAN of the
      anchors' old→new drifts measured in the SAME quiet window, then re-apply
      bench_diff's double threshold (>1.25x AND >0.15 s) against the
@@ -39,18 +40,11 @@ ROOT = os.path.join(os.path.dirname(__file__), "..")
 ANCHORS = ["q_agg_pricing", "q_join_agg", "q_window_topk",
            "q_global_rank", "q_kcore"]
 
-# JDK17 module opens Spark 4 needs outside spark-submit — mirrors
-# build.sbt's jdk17AddOpens so the direct-java DevTime run works while
-# sbt holds the project lock.
-ADD_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-]
+# JDK17 module opens Spark 4 needs outside spark-submit — the list
+# build.sbt also reads, so the direct-java DevTime run works while sbt
+# holds the project lock.
+with open(os.path.join(os.path.dirname(__file__), "jdk17-add-opens.txt")) as f:
+    ADD_OPENS = [l.strip() for l in f if l.strip() and not l.startswith("#")]
 
 
 def loadavg1() -> float:
@@ -186,7 +180,7 @@ def main() -> int:
         for a, r in per_anchor.items())
     block = (
         f"\n### Round-{rnd} gate-3 auto-adjudication ({stamp}, mechanical)\n"
-        f"\nQuiet-window DevTime (loadavg {la:.2f}, min-of-2 warm), "
+        f"\nQuiet-window DevTime (loadavg {la:.2f}, min of 3 passes), "
         f"anchors: {anchor_tbl} — median drift {drift:.2f}x divided out.\n"
         + "".join(f"- {l}\n" for l in lines)
         + power

@@ -22,7 +22,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):  # Spark-written fixture (DevSfGen) = directory
+        if os.path.isdir(path):  # Spark-written fixture = directory
             path += "/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     with open(f"{out_dir}/oracle_sql.json") as f:

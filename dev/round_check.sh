@@ -94,14 +94,8 @@ fi
 # Every registered query must run (not throw) against 0-row copies of all
 # fixture tables — at 100 TB a pruned read or hard filter legitimately
 # yields zero rows, and a query that crashes on them is a production
-# incident. Direct-java (no sbt lock), same module opens as adjudicate.py.
-JOPTS="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
---add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED \
---add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED \
---add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
---add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
---add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED \
---add-opens java.base/sun.util.calendar=ALL-UNNAMED"
+# incident. Direct-java (no sbt lock), with the module opens build.sbt reads.
+JOPTS=$(sed -e '/^#/d' -e '/^$/d' -e 's/.*/--add-opens &=ALL-UNNAMED/' dev/jdk17-add-opens.txt)
 # Fixture base derived from SPARK_GRAFT_SF_DIR (ADVICE r13: the gate
 # hard-coded /root/testdata while sibling tooling honors the env var).
 FIXTURE_BASE=$(dirname "${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}")

@@ -1,6 +1,17 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** JSON string literal: escapes the quote, the backslash and EVERY
+    * control char (< 0x20) — one raw tab or CR in oracle SQL would make
+    * the driver's `json.load` fail and silently zero a round's
+    * correctness. Shared by Verify's oracle_sql.json. */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case '\r' => "\\r"; case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -158,12 +169,6 @@ object Bench {
       (r, (System.nanoTime() - w0) / 1e9, !cut)
     }
     def jnum(v: Double): String = if (v.isNaN) "null" else v.toString
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     import scala.jdk.CollectionConverters._
     // Build the COMPLETE record from whatever passes have finished so far,
     // print it, and persist it to BENCH_LOCAL.json. Called after every

@@ -113,7 +113,9 @@ object DevEmptyBoard {
     names.foreach { name =>
       val t0 = System.nanoTime()
       try {
-        val n = Queries.all(name)(spark, emptyDir).count()
+        // collect, not count: count lets Catalyst prune output columns, so
+        // an expression that throws on degenerate input could go unevaluated.
+        val n = Queries.all(name)(spark, emptyDir).collect().length
         println(f"[empty] $name ok rows=$n (${(System.nanoTime() - t0) / 1e9}%.2fs)")
       } catch {
         case e: Throwable =>

@@ -1,32 +1,98 @@
 package graft
 
-/** Dev tool: min-of-2 warm noop-sink timing of named queries against an
-  * arbitrary fixture dir — the quiet-JVM adjudication primitive
-  * ([[DevScaling]]'s `time` loop without the fixed-dim replica build), for
-  * full-dimension comparisons (e.g. sf0.1 vs the [[DevSfGen]] sf1 build)
-  * where the fixed-dim organic-growth shape would be the wrong model.
-  * An optional third argument raises the rep count (min-of-N) for
-  * single-query dispositions that need more power than min-of-2.
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+
+/** Dev timing instrument: pass-major sequential passes of named queries
+  * into the `noop` sink, in ONE JVM, against any fixture dir.
   *
-  * `runMain graft.DevTime <dir> <q1,q2,...> [reps]` */
+  * Each pass runs every query once, in order; checkpoint blocks are
+  * released between queries, outside the timer. Per pass it prints
+  * `[pass p] wall <s> s` (the sum of that pass's query walls — what
+  * `dev/ab_prev.sh` compares across commits); after the last pass, one
+  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T` line per query
+  * (what `dev/adjudicate.py` band-tests), min over passes, with the job,
+  * stage and task counts of that fastest run. The counts come from one
+  * listener keyed by a per-(query, pass) job group, so jobs that run on
+  * other threads (broadcasts, subqueries) are attributed to their query;
+  * stages and tasks count what was submitted (skipped stages excluded).
+  *
+  * The default 3 passes match min-of-2 after a warm-up: the cold first
+  * pass is slower and so never the min unless the host is.
+  * Unknown query names fail before a Spark session starts (a typo must
+  * not silently shrink the sample).
+  *
+  * `runMain graft.DevTime <dir> <q1,q2,...|all> [passes]` */
 object DevTime {
+  final case class Args(dir: String, names: Seq[String], passes: Int)
+
+  def parse(args: Array[String]): Args = {
+    require(args.length == 2 || args.length == 3,
+      "usage: DevTime <dir> <q1,q2,...|all> [passes]")
+    val names =
+      if (args(1) == "all") Queries.all.keys.toSeq.sorted
+      else args(1).split(",").toSeq
+    val unknown = names.filterNot(Queries.all.contains)
+    require(unknown.isEmpty, s"unknown queries (not in Queries.all): ${unknown.mkString(", ")}")
+    val passes = if (args.length > 2) args(2).toIntOption.getOrElse(0) else 3
+    require(passes >= 1, s"passes must be a positive integer, got '${args(2)}'")
+    Args(args(0), names, passes)
+  }
+
+  /** Jobs, stages and tasks of one job group, as the listener saw them. */
+  private final class Counts {
+    val jobs, stages, tasks = new AtomicLong
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: DevTime <dir> <q1,q2,...> [reps]")
-    val dir = args(0)
-    val reps = if (args.length > 2) args(2).toInt else 2
-    val (names, unknown) = args(1).split(",").toSeq.partition(Queries.all.contains)
-    require(unknown.isEmpty,
-      s"unknown queries (not in Queries.all): ${unknown.mkString(", ")}")
+    val Args(dir, names, passes) = parse(args)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    names.foreach { name =>
-      val fn = Queries.all(name)
-      fn(spark, dir).write.mode("overwrite").format("noop").save() // warmup
-      val t = (1 to reps).map { _ =>
+    val sc = spark.sparkContext
+    val counts = new ConcurrentHashMap[String, Counts]()
+    def of(props: java.util.Properties): Option[Counts] =
+      Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .map(counts.computeIfAbsent(_, _ => new Counts))
+    val drained = new CountDownLatch(1)
+    val Drain = "devtime drain"
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Drain))
+          drained.countDown()
+        of(e.properties).foreach(_.jobs.incrementAndGet())
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        of(e.properties).foreach { c =>
+          c.stages.incrementAndGet(); c.tasks.addAndGet(e.stageInfo.numTasks)
+        }
+    })
+    def group(name: String, p: Int) = s"devtime $name $p"
+
+    val walls = (1 to passes).map { p =>
+      val per = names.map { name =>
+        sc.setJobGroup(group(name, p), group(name, p))
         val t0 = System.nanoTime()
-        fn(spark, dir).write.mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      println(f"[time] $name%-24s $dir $t%8.2f s")
+        Queries.all(name)(spark, dir).write.mode("overwrite").format("noop").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        sc.clearJobGroup()
+        graft.operators.Checkpoints.release(spark)
+        secs
+      }
+      println(f"[pass $p] wall ${per.sum}%8.2f s")
+      per
+    }
+    // Listener events arrive in post order: once the marker job's start is
+    // seen, every earlier query's jobs and stages have been counted.
+    sc.setJobGroup(Drain, Drain)
+    sc.parallelize(Seq(1), 1).count()
+    sc.clearJobGroup()
+    require(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain within 60 s")
+    names.zipWithIndex.foreach { case (name, i) =>
+      val best = walls.indices.minBy(walls(_)(i))
+      val c = counts.getOrDefault(group(name, best + 1), new Counts)
+      println(f"[time] $name%-24s $dir ${walls(best)(i)}%8.2f s " +
+        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
     }
     spark.stop()
   }

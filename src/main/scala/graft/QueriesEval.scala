@@ -95,7 +95,7 @@ private[graft] trait QueriesEval { this: Queries.type =>
     bySrc.crossJoin(broadcast(pooled))
       .select(col("source"), col("n_docs"),
         expr(s"CAST(${roundDiv("ss", "nn", 1000L)} AS BIGINT)").as("pooled_mean_e3"),
-        expr(s"CAST(${roundDiv("(ss - chars)", "(nn - n_docs)", 1000L)} AS BIGINT)")
+        expr(s"CAST(${roundDiv("(ss - chars)", "nullif(nn - n_docs, 0)", 1000L)} AS BIGINT)")
           .as("loo_mean_e3"))
       .withColumn("influence_e3", col("loo_mean_e3") - col("pooled_mean_e3"))
       .transform(ps(col("source")))
@@ -247,11 +247,11 @@ private[graft] trait QueriesEval { this: Queries.type =>
       .withColumn("det", expr("CAST(a11 AS DOUBLE) * CAST(a22 AS DOUBLE) " +
         "- CAST(a12 AS DOUBLE) * CAST(a12 AS DOUBLE)"))
       .withColumn("beta1d", expr("(CAST(b1 AS DOUBLE) * CAST(a22 AS DOUBLE) " +
-        "- CAST(b2 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det"))
+        "- CAST(b2 AS DOUBLE) * CAST(a12 AS DOUBLE)) / nullif(det, 0)"))
       .withColumn("beta2d", expr("(CAST(b2 AS DOUBLE) * CAST(a11 AS DOUBLE) " +
-        "- CAST(b1 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det"))
+        "- CAST(b1 AS DOUBLE) * CAST(a12 AS DOUBLE)) / nullif(det, 0)"))
       .withColumn("b0d", expr("(CAST(ty AS DOUBLE) - beta1d * CAST(t1 AS DOUBLE) " +
-        "- beta2d * CAST(t2 AS DOUBLE)) / CAST(tn AS DOUBLE)"))
+        "- beta2d * CAST(t2 AS DOUBLE)) / nullif(CAST(tn AS DOUBLE), 0)"))
     val sse = cells.join(broadcast(models.select(col("fold"), col("b0d"),
         col("beta1d"), col("beta2d"))), Seq("fold"))
       .select(col("fold"), expr("CAST(round((CAST(y AS DOUBLE) - b0d " +
@@ -264,8 +264,8 @@ private[graft] trait QueriesEval { this: Queries.type =>
         expr("CAST(round(beta1d * 1000000, 0) AS BIGINT)").as("beta_qty_e6"),
         expr("CAST(round(beta2d * 1000000, 0) AS BIGINT)").as("beta_disc_e6"),
         expr("CAST(round((1.0D - CAST(sse AS DOUBLE) * CAST(n_test AS DOUBLE) " +
-          "/ (CAST(n_test AS DOUBLE) * CAST(tsyy AS DOUBLE) " +
-          "- CAST(tsy AS DOUBLE) * CAST(tsy AS DOUBLE))) * 1000000, 0) " +
+          "/ nullif(CAST(n_test AS DOUBLE) * CAST(tsyy AS DOUBLE) " +
+          "- CAST(tsy AS DOUBLE) * CAST(tsy AS DOUBLE), 0)) * 1000000, 0) " +
           "AS BIGINT)").as("oof_r2_ppm"))
       .transform(ps(col("fold")))
   }
@@ -348,8 +348,8 @@ private[graft] trait QueriesEval { this: Queries.type =>
       .groupBy().agg(count(lit(1)).as("n"), sum(expr("g")).as("n1"),
         sum(expr("CASE WHEN g = 1 THEN m ELSE CAST(0 AS BIGINT) END")).as("s1"),
         sum(expr("CASE WHEN g = 0 THEN m ELSE CAST(0 AS BIGINT) END")).as("s0"))
-      .select(expr(s"CAST(${roundDiv("s1", "n1", 1000L)} AS BIGINT) - " +
-        s"CAST(${roundDiv("s0", "(n - n1)", 1000L)} AS BIGINT)").as("obs_d_e6"))
+      .select(expr(s"CAST(${roundDiv("s1", "nullif(n1, 0)", 1000L)} AS BIGINT) - " +
+        s"CAST(${roundDiv("s0", "nullif(n - n1, 0)", 1000L)} AS BIGINT)").as("obs_d_e6"))
     nulls.crossJoin(broadcast(obs))
       .agg(first(col("obs_d_e6")).as("obs_d_e6"),
         count(lit(1)).as("n_reps"),
@@ -404,7 +404,7 @@ private[graft] trait QueriesEval { this: Queries.type =>
     // ONE materialization of the edge set (r16, guide §2.4): exchange reuse
     // does not span executions, so the emptiness probe, the round-0 rank
     // build and the symDeg cut each re-ran the 3-shuffle co-purchase build
-    // (~0.55 s × 3 at sf0.1, DevProfile) — every consumer below reads this
+    // (~0.55 s × 3 at sf0.1, job profile) — every consumer below reads this
     // checkpoint instead. The probe rides the same frame.
     val e = Checkpoints.truncate(e0)
     if (e.isEmpty) {
@@ -614,9 +614,9 @@ private[graft] trait QueriesEval { this: Queries.type =>
       .select(col("n0"), col("n1"), col("u1_x2"),
         expr("CASE WHEN n0 = 0 OR n1 = 0 THEN 0 ELSE CAST(round(" +
           "(CAST(u1_x2 AS DOUBLE) / 2.0D - CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE) / 2.0D) " +
-          "/ sqrt(CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE) / 12.0D " +
+          "/ nullif(sqrt(CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE) / 12.0D " +
           "* ((CAST(nn AS DOUBLE) + 1.0D) - CAST(tie3 AS DOUBLE) " +
-          "/ (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) - 1.0D)))) " +
+          "/ (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) - 1.0D)))), 0) " +
           "* 1000000, 0) AS BIGINT) END").as("z_e6"))
   }
 
@@ -903,9 +903,9 @@ private[graft] trait QueriesEval { this: Queries.type =>
       .select(col("n"), col("a1"), col("b1"), col("agree"),
         expr(s"CAST(round(CAST(${dec.format("n")} * agree - " +
           s"(${dec.format("a1")} * b1 + ${dec.format("(n - a1)")} * (n - b1)) " +
-          s"AS DOUBLE) / CAST(${dec.format("n")} * n - " +
+          s"AS DOUBLE) / nullif(CAST(${dec.format("n")} * n - " +
           s"(${dec.format("a1")} * b1 + ${dec.format("(n - a1)")} * (n - b1)) " +
-          "AS DOUBLE) * 1000000, 0) AS BIGINT)").as("kappa_e6"))
+          "AS DOUBLE), 0) * 1000000, 0) AS BIGINT)").as("kappa_e6"))
   }
 
   /** Kendall tau-b between the revenue ranking and the volume ranking of
@@ -967,11 +967,13 @@ private[graft] trait QueriesEval { this: Queries.type =>
       struct(dist2e9(c).as("d"), lit(cid).as("cid"))
     }
     val sorted = array_sort(array(packed.toSeq: _*))
+    // One seed centroid has no second-nearest: d2 (and so s) is NULL.
+    val d2 = if (cents.length > 1) sorted.getItem(1).getField("d") else lit(null).cast("bigint")
     Tables.embeddings(s, d)
       .where(lit(found))
       .select(sorted.getItem(0).getField("cid").as("cluster_id"),
         sorted.getItem(0).getField("d").as("d1"),
-        sorted.getItem(1).getField("d").as("d2"))
+        d2.as("d2"))
       .select(col("cluster_id"),
         expr("CASE WHEN d2 = 0 THEN CAST(0 AS BIGINT) ELSE " +
           s"CAST(1000000 - (${ppmDiv("d1", "d2")}) AS BIGINT) END").as("s_ppm"))

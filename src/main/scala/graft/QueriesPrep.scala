@@ -239,7 +239,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * coefficient so both engines hit the identical IEEE quotient. */
   def qRegrTrend(s: SparkSession, d: String): DataFrame = {
     val num = (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-    val den = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
+    val den = nullif((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"), lit(0.0))
     Tables.events(s, d)
       .select(col("event_type"),
         datediff(col("ts").cast("date"), lit("2024-01-01").cast("date"))
@@ -368,7 +368,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("real_tokens"),
         sum(col("padded")).as("padded_tokens"))
       .select(col("source"), col("n_docs"), col("real_tokens"), col("padded_tokens"),
-        expr("((padded_tokens - real_tokens) * 1000) div padded_tokens").as("waste_permille"))
+        expr("((padded_tokens - real_tokens) * 1000) div nullif(padded_tokens, 0)").as("waste_permille"))
       .transform(ps(col("source")))
   }
 
@@ -400,7 +400,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
       .orderBy(col("gap").desc, col("v"))
       .limit(1)
       .select(col("v").as("v_at_max"), col("n0"), col("n1"),
-        expr("(gap * 1000000) div (n0 * n1)").as("d_ppm"))
+        expr("(gap * 1000000) div nullif(n0 * n1, 0)").as("d_ppm"))
   }
 
   /** Winsorized per-cohort mean: event value-cents clamped to their
@@ -681,7 +681,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
         expr("rank_sum - (n_pos * (n_pos + 1)) div 2").as("u_stat"),
         col("n_total"))
       .select(col("class"), col("n_pos"), col("u_stat"),
-        expr(ppmDiv("u_stat", "(n_pos * (n_total - n_pos))")).as("auc_ppm"))
+        expr(ppmDiv("u_stat", "nullif(n_pos * (n_total - n_pos), 0)")).as("auc_ppm"))
       .transform(ps(col("class")))
   }
 
@@ -813,14 +813,14 @@ private[graft] trait QueriesPrep { this: Queries.type =>
       .select("blk").hint("shuffle_hash")
     // r17 (guide §2.5/§2.2): the in-block expansion + levenshtein verify is
     // CPU-heavy on FEW bytes, and AQE's byte-targeted coalescing (1 MB
-    // minPartitionSize) squeezed it to 8 tasks on 32 cores (DevProfile:
+    // minPartitionSize) squeezed it to 8 tasks on 32 cores (job profile:
     // one 1.55 s job carried the wall). Re-spread the (blk, name) rows —
     // ~tens of bytes each — across 2× the cluster's default parallelism
     // with an EXPLICIT width (user-specified numPartitions is exempt from
     // AQE coalescing; the value derives from the cluster, not a local
     // constant). The groupBy reuses the hash(blk) partitioning, so the
     // expansion stage inherits the width. Measured (with the names
-    // widening above) DevProfile warm rep 3.26 s → 1.67 s at sf0.1; the
+    // widening above) job profile warm rep 3.26 s → 1.67 s at sf0.1; the
     // extra exchange carries ~7 MB.
     val par = s.sparkContext.defaultParallelism * 2
     blocks.join(keep, Seq("blk"))
@@ -1198,7 +1198,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     // MEMORY_AND_DISK it starves the execution pool that builds it).
     // r17: the r16 claim above held at the 100× study scale, but the final
     // plan at sf0.1 carries 298 Exchanges and ZERO ReusedQueryStage nodes
-    // (DevProfile at HEAD: 20 jobs / 54 stages / 56 tasks, wall dominated
+    // (job profile at HEAD: 20 jobs / 54 stages / 56 tasks, wall dominated
     // by stage-chain latency, not compute). Materialize the two frames
     // that are BOUNDED by construction and re-read most: sig (one row per
     // doc — the pagerank-ranks compact-frame rule) and est (≤ the 100 k
@@ -1394,7 +1394,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     cnt.crossJoin(broadcast(cnt.agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))))
       .withColumn("gap", abs(col("c1") * col("n2") - col("c2") * col("n1")))
       .withColumn("gap_sum", expr("sum(gap) OVER ()"))
-      .withColumn("tvd_ppm", expr(ppmDiv("gap_sum", "(2 * n1 * n2)")))
+      .withColumn("tvd_ppm", expr(ppmDiv("gap_sum", "nullif(2 * n1 * n2, 0)")))
       .select(col("event_type"), col("c1"), col("c2"), col("gap"), col("tvd_ppm"))
       .transform(ps(col("event_type")))
   }

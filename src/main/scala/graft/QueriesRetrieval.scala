@@ -763,12 +763,12 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
       .withColumn("n_union_kmv",
         when(col("n_usk") < K, col("n_usk"))
           .otherwise(expr(s"(${K - 1}L * 4503599627370496L) div kth")))
-      .withColumn("n_inter_kmv", expr("(shared_k * n_union_kmv) div n_usk"))
+      .withColumn("n_inter_kmv", expr("(shared_k * n_union_kmv) div nullif(n_usk, 0)"))
       .select(col("n_union_exact"), col("n_union_kmv"),
-        expr("(abs(n_union_kmv - n_union_exact) * 1000000L) div n_union_exact")
+        expr("(abs(n_union_kmv - n_union_exact) * 1000000L) div nullif(n_union_exact, 0)")
           .as("union_err_ppm"),
         col("n_inter_exact"), col("n_inter_kmv"),
-        expr("(abs(n_inter_kmv - n_inter_exact) * 1000000L) div n_inter_exact")
+        expr("(abs(n_inter_kmv - n_inter_exact) * 1000000L) div nullif(n_inter_exact, 0)")
           .as("inter_err_ppm"),
         col("shared_k"), col("n_usk"))
   }
@@ -925,7 +925,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
       .select(col("ip").as("est_agms"))
     est.crossJoin(broadcast(exact))
       .select(col("n_exact"), col("est_agms"),
-        expr("(abs(est_agms - n_exact) * 1000000L) div n_exact").as("err_ppm"))
+        expr("(abs(est_agms - n_exact) * 1000000L) div nullif(n_exact, 0)").as("err_ppm"))
   }
 
   /** AMS second-moment (self-join size) estimation, audited against exact

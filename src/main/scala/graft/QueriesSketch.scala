@@ -321,8 +321,8 @@ private[graft] trait QueriesSketch { this: Queries.type =>
         sum(when(col("arm") === 1 && col("converted") === 0, 1L).otherwise(0L)).as("c"),
         sum(when(col("arm") === 1 && col("converted") === 1, 1L).otherwise(0L)).as("d"))
       .select(col("a"), col("b"), col("c"), col("d"),
-        expr(ppmDiv("b", "(a + b)")).as("rate0_ppm"),
-        expr(ppmDiv("d", "(c + d)")).as("rate1_ppm"),
+        expr(ppmDiv("b", "nullif(a + b, 0)")).as("rate0_ppm"),
+        expr(ppmDiv("d", "nullif(c + d, 0)")).as("rate1_ppm"),
         expr("CASE WHEN a + b = 0 OR c + d = 0 OR a + c = 0 OR b + d = 0 THEN NULL " +
           "ELSE round(((a + b + c + d) * pow(CAST(a AS DOUBLE) * d - CAST(b AS DOUBLE) * c, 2)) / " +
           "((CAST(a AS DOUBLE) + b) * (CAST(c AS DOUBLE) + d) * " +

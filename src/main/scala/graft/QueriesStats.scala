@@ -43,7 +43,7 @@ private[graft] trait QueriesStats { this: Queries.type =>
         expr("CAST(round(value * 10000, 0) AS BIGINT)").as("ve4"))
     // r17 (guide §2.5): the 64× md5 resample pass ran as ONE task — the
     // event scan is a single byte-tiny split, and everything from explode
-    // through the partial aggregate fused into that scan stage (DevProfile:
+    // through the partial aggregate fused into that scan stage (job profile:
     // one 2.88 s 1-task job carried the whole wall). Re-spread the rows
     // across 2× the cluster's default parallelism with an EXPLICIT
     // hash-keyed width (user-specified numPartitions is exempt from AQE
@@ -908,8 +908,8 @@ private[graft] trait QueriesStats { this: Queries.type =>
     val tot = st.agg(sum(col("w_e4")).as("wt"))
     val quotas = st.crossJoin(broadcast(tot))
       .withColumn("q_num", col("w_e4") * lit(B))
-      .withColumn("base", expr("q_num div wt"))
-      .withColumn("rem", expr("q_num % wt"))
+      .withColumn("base", expr("q_num div nullif(wt, 0)"))
+      .withColumn("rem", expr("q_num % nullif(wt, 0)"))
     val wrk = Window.orderBy(col("rem").desc, col("stratum"))
     val short = quotas.agg((lit(B) - sum(col("base"))).as("left1"))
     quotas.crossJoin(broadcast(short))
@@ -978,10 +978,9 @@ private[graft] trait QueriesStats { this: Queries.type =>
     * window must shuffle AND sort the whole fact table before discarding
     * all but k per group, while the aggregator truncates to k pairs per
     * group IN THE MAP TASKS, so the exchange carries k·|groups| rows at
-    * any corpus size (DevHeavyTail measures the shuffle collapse —
-    * SCALING.md). Total order (cents desc, row id asc); row id =
-    * `orderkey·10 + linenumber` (linenumber ≤ 7 — collision-free and
-    * engine-portable). */
+    * any corpus size (SCALING.md measures the shuffle collapse). Total
+    * order (cents desc, row id asc); row id = `orderkey·10 + linenumber`
+    * (linenumber ≤ 7 — collision-free and engine-portable). */
   def qPartTopShipments(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val agg = new graft.functions.TopKAgg(3).toColumn
@@ -1582,17 +1581,17 @@ private[graft] trait QueriesStats { this: Queries.type =>
       .withColumn("det", expr("CAST(a11 AS DOUBLE) * CAST(a22 AS DOUBLE) " +
         "- CAST(a12 AS DOUBLE) * CAST(a12 AS DOUBLE)"))
       .withColumn("beta1d", expr("(CAST(b1 AS DOUBLE) * CAST(a22 AS DOUBLE) " +
-        "- CAST(b2 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det"))
+        "- CAST(b2 AS DOUBLE) * CAST(a12 AS DOUBLE)) / nullif(det, 0)"))
       .withColumn("beta2d", expr("(CAST(b2 AS DOUBLE) * CAST(a11 AS DOUBLE) " +
-        "- CAST(b1 AS DOUBLE) * CAST(a12 AS DOUBLE)) / det"))
+        "- CAST(b1 AS DOUBLE) * CAST(a12 AS DOUBLE)) / nullif(det, 0)"))
       .select(col("n"),
         expr("CAST(round(beta1d * 1000000, 0) AS BIGINT)").as("beta_qty_e6"),
         expr("CAST(round(beta2d * 1000000, 0) AS BIGINT)").as("beta_disc_e6"),
         expr("CAST(round((CAST(sy AS DOUBLE) - beta1d * CAST(s1 AS DOUBLE) " +
-          "- beta2d * CAST(s2 AS DOUBLE)) / CAST(n AS DOUBLE) * 1000, 0) " +
+          "- beta2d * CAST(s2 AS DOUBLE)) / nullif(CAST(n AS DOUBLE), 0) * 1000, 0) " +
           "AS BIGINT)").as("intercept_e3"),
         expr("CAST(round((beta1d * CAST(b1 AS DOUBLE) + beta2d * CAST(b2 AS DOUBLE)) " +
-          "/ CAST(cyy AS DOUBLE) * 1000000, 0) AS BIGINT)").as("r2_ppm"))
+          "/ nullif(CAST(cyy AS DOUBLE), 0) * 1000000, 0) AS BIGINT)").as("r2_ppm"))
   }
 
   /** Three declared gradient-descent steps of two-feature logistic

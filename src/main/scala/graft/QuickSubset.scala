@@ -22,7 +22,7 @@ package graft
   * zero-padded BENCH_rNN convention does not apply to BENCH_LOCAL_rN).
   * Picks are intersected with the caller's inventory predicate and every
   * drop is REPORTED, never silent (ADVICE r15: ab_prev runs the subset
-  * through the previous round's worktree, whose DevPasses fails fast on
+  * through the previous round's worktree, whose DevTime fails fast on
   * names that round never had — a rename at HEAD must not kill the
   * escalation chain with an opaque error). */
 object QuickSubset {
@@ -90,7 +90,7 @@ object QuickSubset {
     * stderr. Stratifies from the newest archived snapshot and
     * additionally intersects with the SECOND-newest snapshot's query set
     * when one exists — that set is the previous round's inventory, which
-    * is exactly what the ref-side worktree's DevPasses can run. */
+    * is exactly what the ref-side worktree's DevTime can run. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(".")
     val snaps = snapshots(dir)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
   def local(cpus: String): SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .appName("graft")
@@ -43,12 +43,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // experiment hook: SPARK_GRAFT_CONF="key=value;key=value" overrides
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark

@@ -21,10 +21,10 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, Times
   * `spark.read.schema(...)`. An entry is keyed by the session, by the
   * session's parquet confs (`nanosAsLong` decides how `events.ts` reads)
   * and by the path's listing — every file's name, size and mtime — so a
-  * table rewritten in place (DevEmptyBoard, DevSfGen, temp fixtures in
-  * tests) is re-inferred on its next read. Only the `StructType` is
-  * cached: never a DataFrame (one shared instance would share attribute
-  * ids across self-joins) and never data.
+  * table rewritten in place (DevEmptyBoard's degenerate copies, temp
+  * fixtures in tests) is re-inferred on its next read. Only the
+  * `StructType` is cached: never a DataFrame (one shared instance would
+  * share attribute ids across self-joins) and never data.
   */
 object Tables {
 

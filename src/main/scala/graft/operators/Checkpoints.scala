@@ -19,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `checkpoint()` against that directory — each round writes to the
   *    DFS and survives executor loss/preemption/dynamic deallocation.
   *    The 100-TB posture for spot fleets, at the cost of one DFS
-  *    round-trip per iteration. Measured cost (graft.DevCkptTier,
-  *    SCALING.md round-14 table): ≤ ~10% wall at sf0.1 and within host
-  *    noise at 10×, because each round persists only the compact
+  *    round-trip per iteration. Measured cost (SCALING.md round-14
+  *    table): ≤ ~10% wall at sf0.1 and within host noise at 10×,
+  *    because each round persists only the compact
   *    frontier/label/rank frame (0.3–0.5 MB/run at sf0.1, 5–26 MB at
   *    10× — data-linear, never the edge set).
   *

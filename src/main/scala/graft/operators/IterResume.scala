@@ -28,8 +28,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Opt-in via the session conf [[IterResume.DirConf]]; unset keeps the
   * zero-overhead `localCheckpoint`/`checkpoint` paths untouched. The
   * fault-injection conf [[IterResume.FailAfterConf]] exists for the
-  * restart drill (graft.DevCkptTier --restart and the spec): it kills the
-  * loop AFTER round k commits, exactly like a preemption between rounds.
+  * restart drill (IterResumeSpec; the round-15 numbers are in
+  * SCALING.md): it kills the loop AFTER round k commits, exactly like a
+  * preemption between rounds.
   *
   * Bytes are data-linear: one rank frame per round (0.3–26 MB at
   * sf0.1–10×, never the edge set), same as the reliable-checkpoint tier
