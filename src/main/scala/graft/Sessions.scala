@@ -14,6 +14,13 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time so timestamp semantics match the DuckDB oracle;
   *  - `nanosAsLong` so the ns-precision `events.ts` parquet column is
   *    readable (converted to TimestampType in [[Tables.events]]);
+  *  - `file:` bound to [[graft.sources.PosixLocalFileSystem]] (and its
+  *    `FileContext` twin, for streaming checkpoints), which sets a new
+  *    file's or directory's permission in-process instead of forking a
+  *    `chmod` per call when the native Hadoop library is absent. Hadoop
+  *    caches a `FileSystem` per scheme and user JVM-wide, so a `file:`
+  *    lookup with a conf lacking this binding before the first session
+  *    pins the stock class for the JVM;
   *  - the `WindowExec` logger at ERROR: its "No Partition Defined for
   *    Window operation!" warning fires on every global window and buried
   *    every other warning in the logs. PlanSpec's bounded-frame pins are
@@ -43,6 +50,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.PosixLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.PosixLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
