@@ -21,6 +21,10 @@ import org.apache.spark.sql.SparkSession
   *    caches a `FileSystem` per scheme and user JVM-wide, so a `file:`
   *    lookup with a conf lacking this binding before the first session
   *    pins the stock class for the JVM;
+  *  - 256 KiB broadcast blocks: `TorrentBroadcast` allocates one whole
+  *    block per broadcast, and G1 treats an object of half a region or
+  *    more as humongous garbage, freed only at a young GC. 4 MiB blocks
+  *    piled up and raised peak RSS; 256 KiB is under half of any region;
   *  - the `WindowExec` logger at ERROR: its "No Partition Defined for
   *    Window operation!" warning fires on every global window and buried
   *    every other warning in the logs. PlanSpec's bounded-frame pins are
@@ -50,6 +54,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.broadcast.blockSize", "256k")
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.PosixLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.PosixLocalFs].getName)
       .getOrCreate()

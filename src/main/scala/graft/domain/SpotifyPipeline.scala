@@ -180,11 +180,11 @@ object SpotifyPipeline {
     * (dynamic partition overwrite) and repairs it. Raw layout:
     * `$rawDir/{artist,album,track}.json` newline-delimited records.
     *
-    * First-wins dedup order comes from `readLinesNumbered`'s
-    * `(file, byte offset)` column — stable data, invariant under split
-    * configuration — NOT from `monotonically_increasing_id()`, whose value
-    * depends on the partition layout and would let the dedup winner change
-    * between environments for identical input files. */
+    * First-wins dedup order is `readLinesNumbered`'s `__fetch` (file
+    * order, then line order, under any split configuration) — NOT
+    * `monotonically_increasing_id()` alone, whose value depends on the
+    * partition layout and would let the dedup winner change between
+    * environments for identical input files. */
   def runDaily(spark: org.apache.spark.sql.SparkSession, rawDir: String,
                outDir: String, runDate: String): Unit = {
     import scala.jdk.CollectionConverters._

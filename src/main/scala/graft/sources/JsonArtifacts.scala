@@ -1,11 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
-import org.apache.spark.rdd.NewHadoopRDD
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, monotonically_increasing_id, struct}
+import org.apache.spark.sql.types.StructType
 
 /** Readers/writers for the reference pipeline's JSON object artifacts
   * (`/root/reference` lands JSON arrays per GCS object and re-reads them as
@@ -29,34 +26,22 @@ object JsonArtifacts {
     spark.read.schema(schema).json(path)
 
   /** Read newline-delimited JSON with a STABLE ingestion-order column
-    * `__fetch = struct(file path, byte offset within the file)`.
-    *
-    * `monotonically_increasing_id()` depends on the partition layout (core
-    * count / split size), so a first-wins dedup keyed on it can pick a
-    * different winner on a different cluster for identical input files.
-    * The Hadoop `TextInputFormat` record key is the line's byte offset
-    * within the FILE (not the split), so `(path, offset)` is invariant
-    * under any split configuration — the reproducible analog of the
-    * reference's fetch order (the landed file encodes API arrival order,
-    * sp_airflow/dags/spotify_etl_v2.py:143,161-170). */
-  def readLinesNumbered(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val hadoopRdd = spark.sparkContext.newAPIHadoopFile(
-      path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
-    val rows = hadoopRdd.asInstanceOf[NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit { case (split, it) =>
-        val file = split.asInstanceOf[FileSplit].getPath.toString
-        // .get / .toString copy out of Hadoop's reused Writable instances.
-        it.map { case (off, line) => Row(file, off.get, line.toString) }
-      }
-    val raw = spark.createDataFrame(rows, StructType(Seq(
-      StructField("__file", StringType, nullable = false),
-      StructField("__offset", LongType, nullable = false),
-      StructField("__line", StringType, nullable = false))))
-    raw.where(length(trim(col("__line"))) > 0)
-      .select(from_json(col("__line"), schema).as("__rec"),
-        struct(col("__file"), col("__offset")).as("__fetch"))
-      .select(col("__rec.*"), col("__fetch"))
-  }
+    * `__fetch = struct(__file, __split, __row)`: file path, start of the
+    * line's split, `monotonically_increasing_id()`. The id alone depends on
+    * the partition layout, so a first-wins dedup on it could pick another
+    * winner on another cluster. The struct does not: a line belongs to the
+    * one split holding its first byte, a split's rows are consecutive in
+    * its partition in line order, and the id only breaks ties inside one
+    * `(file, split)`. So `__fetch` order is file order, then line order,
+    * under any split layout — the reproducible analog of the reference's
+    * fetch order (sp_airflow/dags/spotify_etl_v2.py:143,161-170). Blank
+    * lines give no row; a top-level array line, one row per element. */
+  def readLinesNumbered(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).json(path)
+      .withColumn("__fetch", struct(
+        col("_metadata.file_path").as("__file"),
+        col("_metadata.file_block_start").as("__split"),
+        monotonically_increasing_id().as("__row")))
 
   /** Idempotent JSON sink: `SaveMode.Ignore` = write only if the target
     * does not already exist — the engine-side analog of the reference's

@@ -7,13 +7,14 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem every [[graft.Sessions]] session binds: Hadoop's
   * `RawLocalFileSystem` with `setPermission` done in-process by
-  * `Files.setPosixFilePermissions`. Without the native Hadoop library the
+  * `Files.setPosixFilePermissions` and `getFileLinkStatus` by
+  * `Files.isSymbolicLink`. Without the native Hadoop library the
   * stock class forks a `chmod` child for every file and directory it
   * creates (about 50 per `SpotifyPipeline.runDaily`: each part file,
   * `_SUCCESS`, their `.crc` sidecars and the commit protocol's
@@ -31,6 +32,12 @@ class PosixRawLocalFileSystem extends RawLocalFileSystem {
       super.setPermission(p, permission)
     else Files.setPosixFilePermissions(file, PosixRawLocalFileSystem.posixBits(permission))
   }
+
+  /** The stock class forks a `readlink` per call, link or not (twice per
+    * `FileContext.rename`, i.e. per streaming checkpoint commit). */
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }
 
 object PosixRawLocalFileSystem {

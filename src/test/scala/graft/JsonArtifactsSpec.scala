@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+
 import graft.domain.Schemas
 import graft.sources.JsonArtifacts
 
@@ -39,36 +42,85 @@ class JsonArtifactsSpec extends SparkSuite {
     assert(back.as[(String, String)].collect().toSeq == Seq(("a1", "X")))
   }
 
-  test("readLinesNumbered: __fetch is the (file, byte-offset), invariant under split size") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json_num").toString + "/raw"
-    new java.io.File(dir).mkdirs()
-    val lines = (0 until 200).map(i => s"""{"artist_id":"a${i % 7}","artist_name":"row$i"}""")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "part0.json"), lines.mkString("\n"))
+  /** A session whose file scans split at 256 bytes, one split per partition. */
+  private lazy val fineSplits: SparkSession = {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    session.conf.set("spark.sql.files.openCostInBytes", "1")
+    session
+  }
 
-    def fetchOrder(): Seq[(String, Long, String)] = {
-      val df = JsonArtifacts.readLinesNumbered(spark, dir, Schemas.idResolution)
-      df.orderBy("__fetch").select("__fetch.__file", "__fetch.__offset", "artist_name")
-        .as[(String, Long, String)].collect().toSeq
-    }
-    val hc = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.input.fileinputformat.split.maxsize"
-    val coarse = fetchOrder()
-    try {
-      hc.set(key, "256") // force many tiny splits
-      val fine = fetchOrder()
-      // offsets are within-FILE, so the order is identical however the
-      // file is split — this is the property monotonically_increasing_id
-      // does not have.
-      assert(fine == coarse)
-    } finally hc.unset(key)
-    assert(coarse.map(_._3) == (0 until 200).map(i => s"row$i"))
-    // first-wins dedup keyed on __fetch reproduces file order
-    val deduped = graft.operators.Ops.dedupFirstWins(
-      JsonArtifacts.readLinesNumbered(spark, dir, Schemas.idResolution),
-      Seq("artist_id"), Seq(org.apache.spark.sql.functions.col("__fetch")))
-    val winners = deduped.select("artist_name").as[String].collect().toSet
-    assert(winners == (0 until 7).map(i => s"row$i").toSet)
+  /** `artist_name`s of `readLinesNumbered(dir)` in `__fetch` order, the
+    * read's partition count, and the first-wins winner per `artist_id`. */
+  private def fetchOrder(session: SparkSession, dir: String): (Seq[String], Int, Set[String]) = {
+    val df = JsonArtifacts.readLinesNumbered(session, dir, Schemas.idResolution)
+    val winners = graft.operators.Ops.dedupFirstWins(df, Seq("artist_id"), Seq(col("__fetch")))
+    (df.orderBy("__fetch").select("artist_name").as[String].collect().toSeq,
+      df.rdd.getNumPartitions,
+      winners.select("artist_name").as[String].collect().toSet)
+  }
+
+  /** Lands `rows` as `{"artist_id":"a<i % 7>","artist_name":"row<i>"}` lines. */
+  private def landLines(dir: String, file: String, rows: Range): Unit = {
+    new java.io.File(dir).mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, file),
+      rows.map(i => s"""{"artist_id":"a${i % 7}","artist_name":"row$i"}""").mkString("\n"))
+  }
+
+  /** Read in the default layout and in fine splits, `dir` gives rows 0 to
+    * 199 in `__fetch` order, and the first seven rows win the dedup. */
+  private def assertFileThenLineOrder(dir: String): Unit = {
+    val expected = (0 until 200).map(i => s"row$i")
+    val (coarse, _, coarseWinners) = fetchOrder(spark, dir)
+    val (fine, finePartitions, fineWinners) = fetchOrder(fineSplits, dir)
+    assert(finePartitions >= 4, "the fine read must really be split")
+    assert(coarse == expected)
+    assert(fine == coarse)
+    assert(coarseWinners == expected.take(7).toSet)
+    assert(fineWinners == coarseWinners)
+  }
+
+  test("readLinesNumbered: __fetch order is line order, invariant under split size") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_json_num").toString + "/raw"
+    landLines(dir, "part0.json", 0 until 200)
+    assertFileThenLineOrder(dir)
+  }
+
+  test("readLinesNumbered: a directory reads in file order, then line order") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_json_dir").toString + "/raw"
+    landLines(dir, "part1.json", 100 until 200) // landed first, read second
+    landLines(dir, "part0.json", 0 until 100)
+    assertFileThenLineOrder(dir)
+  }
+
+  test("readLinesNumbered: blank, malformed, CRLF, partial and array lines") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_json_edge").toString + "/raw"
+    new java.io.File(dir).mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "part0.json"), Seq(
+      """{"id":"a1","name":"One","followers":{"href":"h","total":10},"popularity":5}""",
+      "",
+      " \t ",
+      """{"id":"a2","name":""",
+      """{"id":"a3","name":"Crlf","popularity":3}""" + "\r",
+      """{"id":"a4","followers":{},"popularity":4}""",
+      """{"id":"a5","name":"NoFollowers"}""",
+      """[{"id":"a6","name":"Arr1"},{"id":"a7","name":"Arr2"}]""",
+      """{"id":"a8","name":"Last","popularity":8}""").mkString("\n"))
+    val rows = JsonArtifacts.readLinesNumbered(spark, dir, Schemas.rawArtist)
+      .orderBy("__fetch")
+      .select($"id", $"name", $"followers.total", $"popularity")
+      .as[(Option[String], Option[String], Option[Long], Option[Long])].collect().toSeq
+    // Blank and whitespace-only lines give no row, a malformed line one
+    // all-null row, a top-level array line one row per element.
+    assert(rows == Seq(
+      (Some("a1"), Some("One"), Some(10L), Some(5L)),
+      (None, None, None, None),
+      (Some("a3"), Some("Crlf"), None, Some(3L)),
+      (Some("a4"), None, None, Some(4L)),
+      (Some("a5"), Some("NoFollowers"), None, None),
+      (Some("a6"), Some("Arr1"), None, None),
+      (Some("a7"), Some("Arr2"), None, None),
+      (Some("a8"), Some("Last"), None, Some(8L))))
   }
 
   test("lines round-trip preserves the record set") {

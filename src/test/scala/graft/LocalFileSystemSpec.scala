@@ -3,12 +3,8 @@ package graft
 import java.net.URI
 import java.nio.file.{Files, Paths, Path => JPath}
 
-import scala.jdk.CollectionConverters._
-
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.NativeCodeLoader
 
@@ -18,8 +14,8 @@ import graft.streaming.EventStreams
 
 /** The `file:` binding of [[Sessions.local]]: every way Spark and graft
   * reach the local filesystem resolves to the in-process-chmod classes,
-  * permission bits match stock Hadoop's bit for bit, and the local writers
-  * fork no `chmod`. */
+  * permission bits and symlink statuses match stock Hadoop's, and the
+  * local writers and streaming checkpoints fork no process. */
 class LocalFileSystemSpec extends SparkSuite {
 
   private def oct(s: String): Int = Integer.parseInt(s, 8)
@@ -90,23 +86,28 @@ class LocalFileSystemSpec extends SparkSuite {
     * while `f` runs, from a JFR recording of `jdk.ProcessStart`. */
   private def shellForks(f: => Unit): Seq[String] = {
     Class.forName("org.apache.hadoop.util.Shell") // its initializer forks once to probe for setsid
-    val rec = new Recording()
-    val dump = Files.createTempFile("graft_fs", ".jfr")
-    try {
-      rec.enable("jdk.ProcessStart").withStackTrace()
-      rec.start()
-      f
-      rec.stop()
-      rec.dump(dump)
-      RecordingFile.readAllEvents(dump).asScala.toSeq.collect {
-        case e if e.getEventType.getName == "jdk.ProcessStart" && e.getStackTrace != null &&
-          e.getStackTrace.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell")) =>
-          e.getString("command")
+    jfrEvents("jdk.ProcessStart")(f)
+      .filter(onStack(_, "org.apache.hadoop.util.Shell")).map(_.getString("command"))
+  }
+
+  test("getFileLinkStatus of a file, a live and a dangling symlink matches stock's") {
+    val root = Files.createTempDirectory("graft_fs")
+    val target = Files.write(root.resolve("target"), Array[Byte](1))
+    Files.createSymbolicLink(root.resolve("live"), target)
+    Files.createSymbolicLink(root.resolve("dangling"), root.resolve("gone"))
+    def links(fs: FileSystem): Seq[(Boolean, Boolean, Option[Path])] =
+      Seq("target", "live", "dangling").map { name =>
+        val st = fs.getFileLinkStatus(new Path(root.resolve(name).toString))
+        (st.isFile, st.isSymlink, if (st.isSymlink) Some(st.getSymlink) else None)
       }
-    } finally {
-      rec.close()
-      Files.deleteIfExists(dump)
-    }
+    val conf = new Configuration()
+    val stock = links(initialized(new RawLocalFileSystem(), conf))
+    val ours = initialized(new PosixRawLocalFileSystem, conf)
+    assert(links(ours) == stock)
+    assert(stock == Seq((true, false, None),
+      (false, true, Some(new Path(s"file:$target"))),
+      (false, true, Some(new Path(s"file:${root.resolve("gone")}")))))
+    intercept[java.io.FileNotFoundException](ours.getFileLinkStatus(new Path(root.resolve("gone").toString)))
   }
 
   test("the recorder sees stock LocalFileSystem's chmod forks") {
@@ -116,29 +117,21 @@ class LocalFileSystemSpec extends SparkSuite {
   }
 
   test("runDaily over a landed day starts no process through Hadoop's Shell") {
-    val raw = Files.createTempDirectory("graft_raw").toString
+    val raw = landTinyDay()
     val out = Files.createTempDirectory("graft_out").toString
-    Files.writeString(Paths.get(s"$raw/artist.json"),
-      """{"id":"a1","name":"A","followers":{"total":10},"popularity":1}""")
-    Files.writeString(Paths.get(s"$raw/album.json"),
-      """{"id":"al1","name":"X","release_date":"2020-02","album_type":"album","total_tracks":2,"artists":[{"id":"a1","name":"A"}]}""")
-    Files.writeString(Paths.get(s"$raw/track.json"),
-      """{"id":"t1","name":"T","track_number":1,"duration_ms":1000,"artists":[{"id":"a1","name":"A"}]}""")
     val session = spark // created outside the recording
     assert(shellForks(SpotifyPipeline.runDaily(session, raw, out, "2024-06-01")).isEmpty)
     assert(spark.read.parquet(s"$out/track_artists").count() == 1)
   }
 
-  // FileContext's rename still forks `readlink` (Hadoop's non-native
-  // getFileLinkStatus), which this binding does not replace.
-  test("a streaming micro-batch with a checkpoint location forks no chmod") {
+  test("a streaming micro-batch with a checkpoint starts no Shell process") {
     val in = Files.createTempDirectory("graft_stream")
     Files.copy(Paths.get(s"$SF/events.parquet"), in.resolve("events_0.parquet"))
     val out = Files.createTempDirectory("graft_sink").toString
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val events = EventStreams.readEventsStream(spark, in.toString, s"$SF/events.parquet")
     val forks = shellForks(EventStreams.writeParquetIdempotent(events.select("event_id"), out, ckpt))
-    assert(!forks.exists(_.startsWith("chmod")), forks)
+    assert(forks.isEmpty, forks)
     assert(Files.exists(Paths.get(s"$ckpt/commits/0")))
   }
 }
