@@ -12,12 +12,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * released between queries, outside the timer. Per pass it prints
   * `[pass p] wall <s> s` (the sum of that pass's query walls — what
   * `dev/ab_prev.sh` compares across commits); after the last pass, one
-  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T` line per query
-  * (what `dev/adjudicate.py` band-tests), min over passes, with the job,
-  * stage and task counts of that fastest run. The counts come from one
-  * listener keyed by a per-(query, pass) job group, so jobs that run on
-  * other threads (broadcasts, subqueries) are attributed to their query;
-  * stages and tasks count what was submitted (skipped stages excluded).
+  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T build_jobs=B`
+  * line per query (what `dev/adjudicate.py` band-tests), min over passes,
+  * with the counts of that fastest run: J, S and T over the whole query,
+  * B the jobs fired while its DataFrame was being built (eager
+  * checkpoints, collects, counts). The counts come from one listener keyed
+  * by per-(query, pass) job groups, one for the build and one for the
+  * sink, so jobs that run on other threads (broadcasts, subqueries) are
+  * attributed to their query; stages and tasks count what was submitted
+  * (skipped stages excluded).
   *
   * The default 3 passes match min-of-2 after a warm-up: the cold first
   * pass is slower and so never the min unless the host is.
@@ -67,13 +70,15 @@ object DevTime {
           c.stages.incrementAndGet(); c.tasks.addAndGet(e.stageInfo.numTasks)
         }
     })
-    def group(name: String, p: Int) = s"devtime $name $p"
+    def group(phase: String, name: String, p: Int) = s"devtime $phase $name $p"
 
     val walls = (1 to passes).map { p =>
       val per = names.map { name =>
-        sc.setJobGroup(group(name, p), group(name, p))
+        sc.setJobGroup(group("build", name, p), group("build", name, p))
         val t0 = System.nanoTime()
-        Queries.all(name)(spark, dir).write.mode("overwrite").format("noop").save()
+        val df = Queries.all(name)(spark, dir)
+        sc.setJobGroup(group("run", name, p), group("run", name, p))
+        df.write.mode("overwrite").format("noop").save()
         val secs = (System.nanoTime() - t0) / 1e9
         sc.clearJobGroup()
         graft.operators.Checkpoints.release(spark)
@@ -90,9 +95,12 @@ object DevTime {
     require(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain within 60 s")
     names.zipWithIndex.foreach { case (name, i) =>
       val best = walls.indices.minBy(walls(_)(i))
-      val c = counts.getOrDefault(group(name, best + 1), new Counts)
+      val Seq(b, r) = Seq("build", "run").map(ph =>
+        counts.getOrDefault(group(ph, name, best + 1), new Counts))
+      def total(f: Counts => AtomicLong) = f(b).get + f(r).get
       println(f"[time] $name%-24s $dir ${walls(best)(i)}%8.2f s " +
-        s"jobs=${c.jobs} stages=${c.stages} tasks=${c.tasks}")
+        s"jobs=${total(_.jobs)} stages=${total(_.stages)} tasks=${total(_.tasks)} " +
+        s"build_jobs=${b.jobs}")
     }
     spark.stop()
   }

@@ -72,8 +72,9 @@ private[graft] trait QueriesCore { this: Queries.type =>
     * two-phase numbering (bucket offsets + bucket-local windows): no global
     * single-partition window anywhere in the plan. */
   def qBatchAssign(s: SparkSession, d: String): DataFrame =
-    Ops.batchAssignScalable(Tables.customer(s, d).select("c_custkey", "c_name"),
-        "c_custkey", 500)
+    Ops.runningSums(Tables.customer(s, d).select("c_custkey", "c_name"), Nil,
+        Seq("c_custkey"), "rn" -> lit(1L))
+      .select(col("c_custkey"), col("c_name"), expr("(rn - 1) div 500 + 1").as("batch_id"))
       .orderBy("c_custkey")
 
   // ------------------------------------------------------------- strings
@@ -122,12 +123,14 @@ private[graft] trait QueriesCore { this: Queries.type =>
   /** S24 — load verification: row count per entity, answered from parquet
     * FOOTER metadata ([[graft.sources.ParquetMeta]]) — COUNT(*) needs no
     * column I/O; a 100 TB table counts in O(files) distributed footer
-    * reads (the same pushdown the DuckDB oracle applies natively). */
+    * reads (the same pushdown the DuckDB oracle applies natively), and
+    * every entity's footers are read in one job. */
   def qEntityCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.entityNames.map { name =>
-      (name, graft.sources.ParquetMeta.rowCount(s, s"$d/$name.parquet"))
-    }.toDF("entity", "n").transform(ps(col("entity")))
+    val counts = graft.sources.ParquetMeta.rowCount(s,
+      Tables.entityNames.map(name => s"$d/$name.parquet"))
+    Tables.entityNames.map(name => (name, counts(s"$d/$name.parquet")))
+      .toDF("entity", "n").transform(ps(col("entity")))
   }
 
   // ----------------------------------------------------------- analytics
@@ -1105,9 +1108,10 @@ private[graft] trait QueriesCore { this: Queries.type =>
   /** Zero-padded object naming (the reference's `batch_%06d.json`,
     * create_artist_batches.py:34). */
   def qBatchFormat(s: SparkSession, d: String): DataFrame =
-    Ops.batchAssignScalable(Tables.customer(s, d).select("c_custkey"), "c_custkey", 500)
+    Ops.runningSums(Tables.customer(s, d).select("c_custkey"), Nil,
+        Seq("c_custkey"), "rn" -> lit(1L))
       .select(col("c_custkey"),
-        format_string("batch_%06d.json", col("batch_id")).as("object_name"))
+        format_string("batch_%06d.json", expr("(rn - 1) div 500 + 1")).as("object_name"))
       .orderBy("c_custkey")
 
   /** Full CUBE: every grouping-set combination of (flag, status) in one

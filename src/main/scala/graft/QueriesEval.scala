@@ -601,7 +601,8 @@ private[graft] trait QueriesEval { this: Queries.type =>
       (col("o_orderkey") % 2).as("arm"))
     val census = vals.groupBy(col("v"))
       .agg(count(lit(1)).as("t"), sum(col("arm")).as("n1v"))
-    val ranked = Ops.prefixSumScalable(census, "v", "t", "before")
+    val ranked = Ops.runningSums(census, Nil, Seq("v"), "cum" -> col("t"))
+      .withColumn("before", col("cum") - col("t"))
     val dec = "CAST(%s AS DECIMAL(38,0))"
     ranked
       .agg(sum(col("t") - col("n1v")).as("n0"), sum(col("n1v")).as("n1"),

@@ -198,14 +198,13 @@ private[graft] trait QueriesPrep { this: Queries.type =>
   /** Curriculum ordering: every document's exact global rank in
     * (n_chars, doc_id) order — the easy→hard global sort position a
     * length-curriculum sampler consumes — computed by
-    * [[graft.operators.Ops.globalRowNumberScalable]]: monotone value
-    * buckets + O(buckets) driver bases + bucket-local row_number, never
+    * [[graft.operators.Ops.runningSums]] as a running count: monotone
+    * value buckets + in-plan bucket bases + bucket-local windows, never
     * the single-task window `row_number() OVER (ORDER BY ...)` would plan
     * as. The final presentation orderBy is the only range exchange. */
   def qGlobalRank(s: SparkSession, d: String): DataFrame =
-    Ops.globalRowNumberScalable(
-        Tables.documents(s, d).select(col("doc_id"), col("n_chars")),
-        "n_chars", Seq("doc_id"), "rank")
+    Ops.runningSums(Tables.documents(s, d).select(col("doc_id"), col("n_chars")), Nil,
+        Seq("n_chars", "doc_id"), "rank" -> lit(1L))
       .orderBy("rank")
 
   /** Robust outlier detection (median/MAD): events whose value-cents
@@ -466,14 +465,14 @@ private[graft] trait QueriesPrep { this: Queries.type =>
   /** Corpus token-frequency Gini coefficient (vocabulary concentration —
     * the "how head-heavy is this corpus" diversity metric), integer-exact:
     * with tokens ranked ascending by count via
-    * [[graft.operators.Ops.globalRowNumberScalable]] (the two-phase bucket
-    * ranker — the vocabulary never collapses to one task),
+    * [[graft.operators.Ops.runningSums]] (a running count, two-phase over
+    * value buckets — the vocabulary never collapses to one task),
     * `gini_ppm = ((2·Σ(rank·c) − (n+1)·Σc) · 10⁶) div (n · Σc)`. One
     * bounded 1-row output. */
   def qTokenGini(s: SparkSession, d: String): DataFrame = {
     val uni = TextOps.explodedShingles(Tables.documents(s, d), "doc_id", "text", 1)
       .groupBy(col("shingle").as("token")).agg(count(lit(1)).as("c"))
-    Ops.globalRowNumberScalable(uni, "c", Seq("token"), "rank")
+    Ops.runningSums(uni, Nil, Seq("c", "token"), "rank" -> lit(1L))
       .agg(count(lit(1)).as("n_vocab"), sum(col("c")).as("total_tokens"),
         sum(col("rank") * col("c")).as("s1"))
       .select(col("n_vocab"), col("total_tokens"),
@@ -523,19 +522,18 @@ private[graft] trait QueriesPrep { this: Queries.type =>
   /** RFM segmentation: users quartiled per recency/frequency/monetary over
     * the user-level aggregate, then the bounded 64-cell segment census.
     * NOT ntile — a global ntile is a single-task window; instead each
-    * metric is ranked by [[graft.operators.Ops.globalRowNumberScalable]]
-    * (bucket-partitioned) and the quartile is the positional
-    * `((rank−1)·4) div n + 1`, restated identically in the oracle, with
-    * user_id as tiebreak so the census is deterministic. Cents keep
-    * monetary integer-exact. */
+    * metric is ranked by [[graft.operators.Ops.runningSums]] (a running
+    * count in bucket-partitioned windows) and the quartile is the
+    * positional `((rank−1)·4) div n + 1`, restated identically in the
+    * oracle, with user_id as tiebreak so the census is deterministic.
+    * Cents keep monetary integer-exact. */
   def qRfmCells(s: SparkSession, d: String): DataFrame = {
-    // The per-user census feeds THREE rank passes (each its own stats agg +
-    // bucket-totals agg + bucket-local window) plus the quartile divisor —
-    // left lazy it re-derives the events aggregation ~7× (r15 judge: the
-    // #2 sequential wall at sf0.1). One eager truncate materializes it
-    // once; `n` then costs a count over the compact checkpointed frame and
-    // every rank pass reads blocks, never the events scan. Same rows, same
-    // quartile arithmetic — the oracle hash is unchanged.
+    // The per-user census feeds THREE rank passes (each reads its input
+    // three times: stats, bucket census, rows) plus the quartile divisor.
+    // One eager truncate materializes it once, so `n` is a count over the
+    // compact checkpointed frame and every pass reads blocks, never the
+    // events scan. Each metric is ranked on its own and joined back on
+    // user_id, so the plan grows linearly with the metrics.
     val users = Checkpoints.truncate(Tables.events(s, d)
       .groupBy("user_id")
       .agg(datediff(max(col("ts").cast("date")), lit("1990-01-01").cast("date"))
@@ -543,13 +541,12 @@ private[graft] trait QueriesPrep { this: Queries.type =>
         count(lit(1)).as("freq"),
         sum(expr("CAST(round(value * 100, 0) AS BIGINT)")).as("cents")))
     val n = users.count()
-    val ranked = Seq("r_days", "freq", "cents").foldLeft(users)((df, m) =>
-      Ops.globalRowNumberScalable(df, m, Seq("user_id"), s"__rk_$m"))
-    def quart(rankCol: String): Column =
-      expr(s"(($rankCol - 1) * 4) div $n + 1")
-    ranked
-      .select(quart("__rk_r_days").as("r_q"), quart("__rk_freq").as("f_q"),
-        quart("__rk_cents").as("m_q"), col("cents"))
+    val quartiles = Seq("r_days" -> "r_q", "freq" -> "f_q", "cents" -> "m_q").map {
+      case (m, q) =>
+        Ops.runningSums(users.select("user_id", m), Nil, Seq(m, "user_id"), "rk" -> lit(1L))
+          .select(col("user_id"), expr(s"((rk - 1) * 4) div $n + 1").as(q))
+    }
+    quartiles.foldLeft(users.select("user_id", "cents"))(_.join(_, "user_id"))
       .groupBy("r_q", "f_q", "m_q")
       .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("cents"))
       .transform(ps(col("r_q"), col("f_q"), col("m_q")))
@@ -672,7 +669,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * ranking beyond that. */
   def qAucPerClass(s: SparkSession, d: String): DataFrame = {
     val scored = scoredEmbeddings(s, d)
-    val ranked = Ops.globalRowNumberScalable(scored, "score", Seq("vec_id"), "rank")
+    val ranked = Ops.runningSums(scored, Nil, Seq("score", "vec_id"), "rank" -> lit(1L))
     val tot = scored.agg(count(lit(1)).as("n_total"))
     ranked.groupBy(col("label").as("class"))
       .agg(count(lit(1)).as("n_pos"), sum(col("rank")).as("rank_sum"))
@@ -693,7 +690,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * ranking pass as the AUC; 10 output rows at any scale. */
   def qCalibrationBins(s: SparkSession, d: String): DataFrame = {
     val scored = scoredEmbeddings(s, d)
-    val ranked = Ops.globalRowNumberScalable(scored, "score", Seq("vec_id"), "rank")
+    val ranked = Ops.runningSums(scored, Nil, Seq("score", "vec_id"), "rank" -> lit(1L))
     val tot = scored.agg(count(lit(1)).as("n_total"))
     ranked.crossJoin(broadcast(tot))
       .select(expr("((rank - 1) * 10) div n_total + 1").as("decile"),
@@ -898,7 +895,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
         Ops.normalizeText(col("text")), 1)).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
       .withColumn("neg_c", -col("c"))
-    val ranked = Ops.globalRowNumberScalable(cnt, "neg_c", Seq("token"), "rank")
+    val ranked = Ops.runningSums(cnt, Nil, Seq("neg_c", "token"), "rank" -> lit(1L))
     val bucket = (0 to 40).foldLeft(lit(-1L)) { (acc, b) =>
       when(col("rank") >= (1L << b), lit(b.toLong)).otherwise(acc)
     }
@@ -1423,23 +1420,19 @@ private[graft] trait QueriesPrep { this: Queries.type =>
 
   /** Revenue concentration (Pareto point): the smallest top-customer
     * prefix holding ≥ 80% of order revenue — reported as customer count,
-    * its corpus share, and the revenue share actually reached. Composes
-    * BOTH scalable numbering operators: revenue-descending global rank via
-    * [[graft.operators.Ops.globalRowNumberScalable]] and the cumulative
-    * sum via [[graft.operators.Ops.prefixSumScalable]] — no single-task
-    * window touches the |customers|-sized frame; the 80% cut is the
-    * integer test `5·cum ≥ 4·total`. */
+    * its corpus share, and the revenue share actually reached. ONE
+    * [[graft.operators.Ops.runningSums]] pass in revenue-descending order
+    * carries both the rank (a running count) and the inclusive cumulative
+    * revenue — no single-task window touches the |customers|-sized frame;
+    * the 80% cut is the integer test `5·cum ≥ 4·total`. */
   def qPareto(s: SparkSession, d: String): DataFrame = {
     val cust = Tables.orders(s, d).groupBy("o_custkey")
       .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("cents"))
-    val ranked = Ops.globalRowNumberScalable(
-        cust.withColumn("neg", -col("cents")), "neg", Seq("o_custkey"), "rank")
-      .drop("neg")
-    val withCum = Ops.prefixSumScalable(ranked, "rank", "cents", "cum_excl")
+    val ranked = Ops.runningSums(cust.withColumn("neg", -col("cents")), Nil,
+        Seq("neg", "o_custkey"), "rank" -> lit(1L), "cum" -> col("cents"))
     val tot = cust.agg(sum(col("cents")).as("total_cents"),
       count(lit(1)).as("n_customers"))
-    withCum.crossJoin(broadcast(tot))
-      .withColumn("cum", col("cum_excl") + col("cents"))
+    ranked.crossJoin(broadcast(tot))
       .where(col("cum") * 5 >= col("total_cents") * 4)
       .orderBy("rank")
       .limit(1)
@@ -1491,7 +1484,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
   /** Equi-height histogram boundaries for the optimizer-stats use case
     * (ANALYZE TABLE): the 8 exact order-statistic bucket upper bounds of
     * lineitem price cents, each the `⌈i·n/8⌉`-th smallest value via
-    * [[graft.operators.Ops.globalRowNumberScalable]] — integer ranks, no
+    * [[graft.operators.Ops.runningSums]] — integer ranks, no
     * interpolation, no single-task window over the fact table; the 8
     * boundary ranks are selected with a broadcast join against a
     * range(1..8)-built frame. */
@@ -1499,7 +1492,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     val cents = Tables.lineitem(s, d)
       .select(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("c"))
     val n = cents.count()
-    val ranked = Ops.globalRowNumberScalable(cents, "c", Seq("c"), "rank")
+    val ranked = Ops.runningSums(cents, Nil, Seq("c"), "rank" -> lit(1L))
     val targets = s.range(1, 9)
       .select(col("id").as("bucket"), expr(s"(id * $n + 7) div 8").as("target"))
     ranked.join(broadcast(targets), col("rank") === col("target"))

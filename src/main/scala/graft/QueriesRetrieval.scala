@@ -814,7 +814,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
         expr(s"CASE WHEN mx = mn THEN mx + 1 ELSE mn + ((b + 1) * (mx - mn + 1)) div $B END"))
       .withColumn("est_cents", expr("lo + ((r - cum) * (hi - lo)) div cnt"))
       .select("p", "n", "r", "est_cents")
-    val ranked = Ops.globalRowNumberScalable(cents, "c", Seq("c"), "rk")
+    val ranked = Ops.runningSums(cents, Nil, Seq("c"), "rk" -> lit(1L))
     val exact = broadcast(targets.select(col("p").as("__p"), (col("r") + 1).as("__t")))
       .join(ranked, col("rk") === col("__t"))
       .select(col("__p").as("p"), col("c").as("exact_cents"))
@@ -870,7 +870,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
         expr("((9 + bkt % 8) * CAST(pow(2.0D, bkt div 8) AS BIGINT)) div 8"))
       .withColumn("est_cents", expr("lo + ((r - cum) * (hi - lo)) div cnt"))
       .select("p", "n", "r", "est_cents")
-    val ranked = Ops.globalRowNumberScalable(cents.select("c"), "c", Seq("c"), "rk")
+    val ranked = Ops.runningSums(cents.select("c"), Nil, Seq("c"), "rk" -> lit(1L))
     val exact = broadcast(targets.select(col("p").as("__p"), (col("r") + 1).as("__t")))
       .join(ranked, col("rk") === col("__t"))
       .select(col("__p").as("p"), col("c").as("exact_cents"))

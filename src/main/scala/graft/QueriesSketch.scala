@@ -577,12 +577,12 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * a 100 TB table layout maintains per file/row-group so point and
     * range scans can prune without reading data. */
   def qZoneMap(s: SparkSession, d: String): DataFrame =
-    Ops.batchAssignScalable(
+    Ops.runningSums(
         Tables.orders(s, d).select(col("o_orderkey"),
           col("o_orderdate").cast("date").as("day"),
           expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents")),
-        "o_orderkey", 500)
-      .groupBy(col("batch_id"))
+        Nil, Seq("o_orderkey"), "rn" -> lit(1L))
+      .groupBy(expr("(rn - 1) div 500 + 1").as("batch_id"))
       .agg(count(lit(1)).as("n_rows"),
         min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"),
         min(col("day")).as("min_day"), max(col("day")).as("max_day"),
@@ -868,51 +868,27 @@ private[graft] trait QueriesSketch { this: Queries.type =>
       .orderBy("cohort_m", "offset")
   }
 
-  /** Two-phase per-group inclusive running weight over a (group, DISTINCT
-    * value) table, in value order — the grouped sibling of
-    * [[graft.operators.Ops.prefixSumScalable]] (r17): `value div 65536`
-    * is an ORDER-PRESERVING bucket (values are integer cents and distinct
-    * within a group, so the order is total and the split is pure integer
-    * algebra), per-(group, bucket) subtotals give exclusive bases via a
-    * window over the tiny bucket census, and the heavy running sum
-    * finishes inside (group, bucket) partitions. Replaces the
-    * group-cardinality window (3 single-thread tasks at ANY scale — the
-    * flag domain does not grow with the corpus) with group×bucket-wide
-    * parallelism. Adds `cum` (inclusive running `wt`) and `tot` (group
-    * total); the input's own derivation is consumed twice (bucket census
-    * + final join) — both schedule as concurrent stages. */
-  private[graft] def groupedCumByValue(vc: DataFrame, grp: String, v: String,
-      wt: String): DataFrame = {
-    val bucketed = vc.withColumn("__b", expr(s"$v div 65536"))
-    val wB = Window.partitionBy(col(grp)).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = bucketed.groupBy(col(grp), col("__b"))
-      .agg(sum(col(wt)).as("__bw"))
-      .withColumn("__base", sum(col("__bw")).over(wB) - col("__bw"))
-      .withColumn("tot",
-        sum(col("__bw")).over(Window.partitionBy(col(grp))))
-      .select(col(grp), col("__b"), col("__base"), col("tot"))
-    val wLoc = Window.partitionBy(col(grp), col("__b")).orderBy(col(v))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(bases), Seq(grp, "__b"))
-      .withColumn("cum", col("__base") + sum(col(wt)).over(wLoc))
-      .drop("__b", "__base")
-  }
-
   /** Weighted median unit price per return flag (weight = quantity) —
     * computed scalably by collapsing to the (flag, DISTINCT cents)
     * weight table FIRST (map-side combinable; the running sum then runs
-    * over value cardinality, not row count — two-phase via
-    * [[groupedCumByValue]]) and taking the first value whose doubled
-    * cumulative weight reaches the total (the weighted lower median —
-    * rank crossing inside a tie run resolves to the same value under any
-    * order, so the min aggregate is deterministic). */
+    * over value cardinality, not row count — the flag-grouped two-phase
+    * [[graft.operators.Ops.runningSums]], so each flag's sum spreads over
+    * its value buckets instead of one task per flag) and taking the first
+    * value whose doubled cumulative weight reaches the total (the
+    * weighted lower median — rank crossing inside a tie run resolves to
+    * the same value under any order, so the min aggregate is
+    * deterministic). The flag totals come straight from the scan (3 rows,
+    * combined map-side), not from a second pass over the value table. */
   def qWeightedMedian(s: SparkSession, d: String): DataFrame = {
-    val vw = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
+    val qty = expr("CAST(round(l_quantity, 0) AS BIGINT)")
+    val vw = li
       .groupBy(col("l_returnflag"),
         expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
-      .agg(sum(expr("CAST(round(l_quantity, 0) AS BIGINT)")).as("wt"))
-    groupedCumByValue(vw, "l_returnflag", "cents", "wt")
+      .agg(sum(qty).as("wt"))
+    val tot = li.groupBy("l_returnflag").agg(sum(qty).as("tot"))
+    Ops.runningSums(vw.join(broadcast(tot), "l_returnflag"), Seq("l_returnflag"),
+        Seq("cents"), "cum" -> col("wt"))
       .where(col("cum") * 2 >= col("tot"))
       .groupBy(col("l_returnflag"))
       .agg(min(col("cents")).as("wmed_cents"), min(col("tot")).as("w_total"))
@@ -925,14 +901,17 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * cumulative-rank interval with the kept band `(n/10, n − n/10]` —
     * `greatest(0, least(cum, hi) − greatest(cum − wt, lo))`. All
     * integer arithmetic to the final one-division mean; the robust-mean
-    * companion to q_winsorize (drop vs clamp). */
+    * companion to q_winsorize (drop vs clamp). The flag counts come
+    * straight from the scan, as in [[qWeightedMedian]]. */
   def qTrimmedMean(s: SparkSession, d: String): DataFrame = {
-    val vc = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
+    val vc = li
       .groupBy(col("l_returnflag"),
         expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
       .agg(count(lit(1)).as("wt"))
-    groupedCumByValue(vc, "l_returnflag", "cents", "wt")
-      .withColumnRenamed("tot", "n")
+    val tot = li.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+    Ops.runningSums(vc.join(broadcast(tot), "l_returnflag"), Seq("l_returnflag"),
+        Seq("cents"), "cum" -> col("wt"))
       .withColumn("lo", expr("n div 10"))
       .withColumn("hi", expr("n - n div 10"))
       .withColumn("kept",
@@ -969,14 +948,17 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * `4·cum ≥ 3n` — no interpolation), Tukey fences at 1.5·IQR in pure
     * integer arithmetic (`2·cents < 2·q1 − 3·iqr`), and the outlier
     * counts from one broadcast join of the 3-row fence table back onto
-    * the collapsed values. Never ranks an individual row. */
+    * the collapsed values. Never ranks an individual row. The flag counts
+    * come straight from the scan, as in [[qWeightedMedian]]. */
   def qIqrOutliers(s: SparkSession, d: String): DataFrame = {
-    val vc = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
+    val vc = li
       .groupBy(col("l_returnflag"),
         expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("cents"))
       .agg(count(lit(1)).as("wt"))
-    val cum = groupedCumByValue(vc, "l_returnflag", "cents", "wt")
-      .withColumnRenamed("tot", "n")
+    val tot = li.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+    val cum = Ops.runningSums(vc.join(broadcast(tot), "l_returnflag"), Seq("l_returnflag"),
+        Seq("cents"), "cum" -> col("wt"))
     val fences = cum.groupBy(col("l_returnflag"))
       .agg(min(when(col("cum") * 4 >= col("n"), col("cents"))).as("q1"),
         min(when(col("cum") * 4 >= col("n") * 3, col("cents"))).as("q3"),
@@ -1270,10 +1252,10 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * distributed: 24 h-gap sessions become ±1 boundary deltas, deltas
     * collapse per INSTANT (map-side; same-instant start+end net out, a
     * stated half-open convention), and the global running concurrency is
-    * the two-phase scalable prefix sum ([[graft.operators.Ops
-    * .prefixSumScalable]] — bucket bases + bucket-local windows, never
-    * the single-task global window). Output: per day with ≥1 boundary,
-    * the max concurrency reached at a boundary instant. */
+    * the two-phase [[graft.operators.Ops.runningSums]] (equal-width
+    * buckets over the instants' own µs range, in-plan bases + bucket-local
+    * windows, never the single-task global window). Output: per day with
+    * ≥1 boundary, the max concurrency reached at a boundary instant. */
   def qMaxConcurrency(s: SparkSession, d: String): DataFrame = {
     val sess = Tables.events(s, d)
       .groupBy(col("user_id"), session_window(col("ts"), "24 hours"))
@@ -1283,9 +1265,8 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     val bounds = sess.select(col("t0").as("t"), lit(1L).as("delta"))
       .unionByName(sess.select(col("t1").as("t"), lit(-1L).as("delta")))
       .groupBy("t").agg(sum(col("delta")).as("net"))
-    Ops.prefixSumScalable(bounds, "t", "net", "before")
-      .select(expr("CAST(timestamp_micros(t) AS DATE)").as("day"),
-        (col("before") + col("net")).as("conc"))
+    Ops.runningSums(bounds, Nil, Seq("t"), "conc" -> col("net"))
+      .select(expr("CAST(timestamp_micros(t) AS DATE)").as("day"), col("conc"))
       .groupBy("day")
       .agg(max(col("conc")).as("max_conc"), count(lit(1)).as("n_boundaries"))
       .orderBy("day")
@@ -1355,14 +1336,14 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * each event's value mapped to its exact global rank ppm
     * `(rank−1)·10⁶ div (n−1)` over the (cents, event_id) total order.
     * The rank is the two-phase scalable global row number
-    * ([[graft.operators.Ops.globalRowNumberScalable]] — never the
+    * ([[graft.operators.Ops.runningSums]] as a running count — never the
     * single-task `row_number() OVER (ORDER BY …)`), the ppm is exact
     * integer arithmetic, and the output is row-bound (one row per
     * event). */
   def qQuantileNormalize(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).select(col("event_id"),
       expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
-    val ranked = Ops.globalRowNumberScalable(ev, "cents", Seq("event_id"), "rk")
+    val ranked = Ops.runningSums(ev, Nil, Seq("cents", "event_id"), "rk" -> lit(1L))
     val total = ev.agg(count(lit(1)).as("n_total"))
     ranked.crossJoin(broadcast(total))
       .select(col("event_id"), col("cents"),

@@ -426,11 +426,12 @@ private[graft] trait QueriesStats { this: Queries.type =>
     * bin = exclusive-prefix-bytes div target. Contiguity in the sort key
     * is what makes the rewrite also a CLUSTERING pass, which is why the
     * packing is by running total, not best-fit. The prefix sum is the
-    * scalable two-phase form ([[Ops.prefixSumScalable]]: bucket bases +
-    * bucket-local windows — never a single-task global window), because
-    * a real lakehouse file listing is millions of rows of METADATA: the
-    * planner never touches data, only the per-segment stats, and its
-    * output is O(total bytes / target) plan rows. */
+    * scalable two-phase form ([[Ops.runningSums]] minus the segment's own
+    * bytes: in-plan bucket bases + bucket-local windows — never a
+    * single-task global window), because a real lakehouse file listing
+    * is millions of rows of METADATA: the planner never touches data,
+    * only the per-segment stats, and its output is O(total bytes /
+    * target) plan rows. */
   def qCompactionPlan(s: SparkSession, d: String): DataFrame = {
     val files = Tables.lineitem(s, d)
       .groupBy(col("l_shipdate").cast("date").as("fdate"))
@@ -438,8 +439,8 @@ private[graft] trait QueriesStats { this: Queries.type =>
       .withColumn("bytes", col("n_rows") * lit(128L))
       .withColumn("dkey",
         datediff(col("fdate"), lit("1992-01-01").cast("date")).cast("long"))
-    Ops.prefixSumScalable(files, "dkey", "bytes", "prefix_excl")
-      .withColumn("bin_id", expr("prefix_excl div 65536 + 1"))
+    Ops.runningSums(files, Nil, Seq("dkey"), "cum" -> col("bytes"))
+      .withColumn("bin_id", expr("(cum - bytes) div 65536 + 1"))
       .groupBy("bin_id")
       .agg(count(lit(1)).as("n_files"), sum("n_rows").as("n_rows"),
         sum("bytes").as("bytes"),
@@ -1731,21 +1732,19 @@ private[graft] trait QueriesStats { this: Queries.type =>
     * [[qAbtestChi2]]: H₀ purchase-rate 0.18 vs H₁ 0.22, α = β = 0.05.
     * Per-trial log-likelihood increments are HARDCODED e9 integers
     * (ln(22/18), ln(78/82) — no cross-engine `ln` anywhere), trials run
-    * in event-id order (the declared ingest sequence), and the running
-    * LLR is the two-phase scalable prefix sum
-    * ([[graft.operators.Ops.prefixSumScalable]] — bucket bases + local
-    * windows, never a single-task global window). The verdict is the
-    * first boundary crossing (±ln 19 ≈ ±2.944·10⁹ e9) by exact
-    * `min(struct(trial, …))`, or `continue` with the final LLR when the
-    * walk never exits. Always exactly one row. */
+    * in event-id order (the declared ingest sequence), and ONE two-phase
+    * [[graft.operators.Ops.runningSums]] pass carries both the trial
+    * number (a running count) and the running LLR (in-plan bucket bases +
+    * bucket-local windows, never a single-task global window). The
+    * verdict is the first boundary crossing (±ln 19 ≈ ±2.944·10⁹ e9) by
+    * exact `min(struct(trial, …))`, or `continue` with the final LLR when
+    * the walk never exits. Always exactly one row. */
   def qSprt(s: SparkSession, d: String): DataFrame = {
     val trials = Tables.events(s, d).select(col("event_id"),
       expr("CASE WHEN event_type = 'purchase' THEN CAST(200670695 AS BIGINT) " +
         "ELSE CAST(-50010421 AS BIGINT) END").as("llr_e9"))
-    val ranked = Ops.globalRowNumberScalable(
-      Ops.prefixSumScalable(trials, "event_id", "llr_e9", "cum_excl"),
-      "event_id", Seq.empty, "trial")
-      .withColumn("cum_e9", col("cum_excl") + col("llr_e9"))
+    val ranked = Ops.runningSums(trials, Nil, Seq("event_id"),
+      "trial" -> lit(1L), "cum_e9" -> col("llr_e9"))
     val bound = 2944438979L
     val crossed = ranked
       .where(col("cum_e9") >= bound || col("cum_e9") <= -bound)

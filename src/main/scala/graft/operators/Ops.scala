@@ -68,124 +68,90 @@ object Ops {
     *
     * NOTE: the single `row_number` window over an unpartitioned ordering
     * serializes through one task — fine for the reference's ~15 k names,
-    * wrong at 100 TB. Use [[batchAssignScalable]] on big data. */
+    * wrong at 100 TB. Use [[runningSums]] on big data. */
   def batchAssign(df: DataFrame, orderCol: Column, n: Int,
                   batchCol: String = "batch_id"): DataFrame = {
     val w = Window.orderBy(orderCol)
     df.withColumn(batchCol, floor((row_number().over(w) - 1) / n) + 1)
   }
 
-  /** Scalable global row-number / chunk assignment over a NUMERIC, non-null
-    * order column. Two-phase: (1) value-bucket every row with a monotone
-    * `width_bucket` over the column's [min, max] range; (2) count rows per
-    * bucket (tiny driver-side array, O(buckets) not O(data)), broadcast the
-    * prefix offsets back, and number rows with a window PARTITIONED by
-    * bucket — every window is bucket-local (~|df|/buckets rows), nothing
-    * serializes through one task, and the plan stays in whole-stage codegen
-    * (no RDD round-trip). Monotonicity of the bucket function is all that's
-    * needed for `offset + within-bucket row_number` to equal the global row
-    * number, so the double cast inside `width_bucket` is harmless even for
-    * keys above 2^53. Output equals [[batchAssign]] when `orderCol` values
-    * are unique. `orderCol` must be non-null (enforced with an explicit
-    * error in [[withBucketBases]]). */
-  def batchAssignScalable(df: DataFrame, orderCol: String, n: Int,
-                          batchCol: String = "batch_id",
-                          buckets: Int = 1024): DataFrame =
-    withBucketBases(df, orderCol, buckets, count(lit(1))) match {
-      case None => // empty input: preserve schema, no rows to number
-        df.withColumn(batchCol, lit(null).cast("long"))
-      case Some(based) =>
-        val w = Window.partitionBy(col("__bucket")).orderBy(col(orderCol))
-        based.withColumn(batchCol,
-            floor((col("__base") + row_number().over(w) - 1) / n) + 1)
-          .drop("__bucket", "__base")
-    }
-
-  /** Scalable EXCLUSIVE global prefix sum of `valueCol` (non-null,
-    * cast to long) in `orderCol` order, emitted as `outCol`: for each row,
-    * the sum of `valueCol` over all strictly-preceding rows. Same two-phase
-    * shape as [[batchAssignScalable]]: bucket-level totals give each bucket
-    * its base, a bucket-partitioned window finishes locally — no
-    * single-partition window anywhere.
+  /** Running sums in a total order, with no single-task window: for each
+    * `(name, weight)` of `sums`, adds `name`, the INCLUSIVE running sum of
+    * `weight` over the rows of the row's `partitionCols` group in
+    * `orderCols` order (a ROWS frame, so rows tied on every order column
+    * still get distinct, contiguous sums in an arbitrary relative order).
+    * A row number is the running sum of `lit(1L)`, a 1-based batch id
+    * `(rn - 1) div n + 1`, an exclusive prefix sum `cum - w`.
     *
-    * CONTRACT: `orderCol` must be NUMERIC and NON-NULL — a null order key
-    * has no place in a total order, so [[withBucketBases]] rejects it with
-    * an explicit error rather than dropping or misnumbering rows. */
-  def prefixSumScalable(df: DataFrame, orderCol: String, valueCol: String,
-                        outCol: String = "prefix_excl",
-                        buckets: Int = 1024): DataFrame =
-    withBucketBases(df, orderCol, buckets,
-        coalesce(sum(col(valueCol).cast("long")), lit(0L))) match {
-      case None => df.withColumn(outCol, lit(null).cast("long"))
-      case Some(based) =>
-        val w = Window.partitionBy(col("__bucket")).orderBy(col(orderCol))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        based.withColumn(outCol,
-            col("__base") + coalesce(sum(col(valueCol).cast("long")).over(w), lit(0L)))
-          .drop("__bucket", "__base")
-    }
+    * Two-phase, and one lazy plan — no driver round-trip:
+    * (1) per group, min/max and null count of the first order column
+    * (NUMERIC) come from an aggregate joined back to the rows (a broadcast
+    * join on `partitionCols`, a cross join with the one-row stats when
+    * there are none); each row gets the MONOTONE equal-width value bucket
+    * `least(width_bucket(v, mn, mx, 1024), 1024)`, or 1 when mn = mx;
+    * (2) the per-(group, bucket) census of weight totals (≤ 1 024 rows per
+    * group) turns into exclusive bucket bases through a window over that
+    * census; the running sum runs in a window partitioned by (group,
+    * bucket), and the bases are broadcast-joined on after it, so the rows'
+    * shuffle waits only for the stats. Monotonicity is all that
+    * `base + bucket-local sum` needs to equal the global answer, so the
+    * double cast inside `width_bucket` is harmless for keys above 2^53.
+    * Rows tied on the first order column share a bucket, so the other
+    * `orderCols` break ties inside it. The group count must be
+    * broadcastable (the census is keyed by it).
+    *
+    * The plan reads `df` three times (stats, census, rows): pass every
+    * weight wanted in one order to ONE call, and never nest calls — each
+    * level would multiply the plan.
+    *
+    * A null first order key has no position in a total order: the plan
+    * fails at its first action with a "contains nulls" error rather than
+    * dropping or misnumbering rows. Null partition values form a group. */
+  def runningSums(df: DataFrame, partitionCols: Seq[String], orderCols: Seq[String],
+                  sums: (String, Column)*): DataFrame = {
+    require(orderCols.nonEmpty && sums.nonEmpty, "runningSums needs an order column and a sum")
+    val buckets = lit(1024L)
+    val key = orderCols.head
+    val stats = df.groupBy(partitionCols.map(col): _*)
+      .agg(min(col(key)).cast("double").as("__mn"), max(col(key)).cast("double").as("__mx"),
+        count_if(col(key).isNull).as("__nulls"))
+    val bucketed = joinBack(df, stats, partitionCols)
+      .withColumn("__bucket",
+        when(col("__nulls") > 0, raise_error(concat(
+          lit(s"order column '$key' contains nulls ("), col("__nulls"), lit(" rows) — " +
+            "a null order key has no position in a total order; filter or coalesce it first"))))
+        .when(col("__mn") === col("__mx"), lit(1L))
+        .otherwise(least(width_bucket(col(key).cast("double"), col("__mn"), col("__mx"),
+          buckets), buckets)))
+      .drop("__mn", "__mx", "__nulls")
+    val ws = sums.indices
+    val groups = partitionCols.map(col)
+    val wBases = Window.partitionBy(groups: _*).orderBy(col("__bucket"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val totals = ws.map(i => sum(sums(i)._2).as(s"__t$i"))
+    val bases = bucketed.groupBy(groups :+ col("__bucket"): _*)
+      .agg(totals.head, totals.tail: _*)
+      .select(groups ++ Seq(col("__bucket")) ++
+        ws.map(i => (sum(col(s"__t$i")).over(wBases) - col(s"__t$i")).as(s"__base$i")): _*)
+    val wLocal = Window.partitionBy(groups :+ col("__bucket"): _*).orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = bucketed.select(col("*") +: ws.map(i =>
+      sum(sums(i)._2).over(wLocal).as(s"__local$i")): _*)
+    joinBack(local, bases, partitionCols :+ "__bucket")
+      .select(col("*") +: ws.map(i =>
+        (col(s"__base$i") + col(s"__local$i")).as(sums(i)._1)): _*)
+      .drop("__bucket" +: ws.flatMap(i => Seq(s"__base$i", s"__local$i")): _*)
+  }
 
-  /** Scalable global row_number: the exact contiguous 1-based rank of every
-    * row in the total order `(orderCol, tieBreak...)`, WITHOUT the
-    * single-task global window `row_number() OVER (ORDER BY ...)` plans as
-    * — the same two-phase bucket scheme as [[prefixSumScalable]] (monotone
-    * `width_bucket` + O(buckets) driver-side bases + bucket-local window).
-    * Rows tied on `orderCol` land in the same bucket, so breaking the tie
-    * inside the bucket-local window IS the global tiebreak; pass enough
-    * `tieBreak` columns to make the order total or equal rows get an
-    * arbitrary (but contiguous) relative rank. Same non-null numeric
-    * `orderCol` contract as [[prefixSumScalable]]. */
-  def globalRowNumberScalable(df: DataFrame, orderCol: String,
-                              tieBreak: Seq[String], outCol: String = "rank",
-                              buckets: Int = 1024): DataFrame =
-    withBucketBases(df, orderCol, buckets, count(lit(1))) match {
-      case None => df.withColumn(outCol, lit(null).cast("long"))
-      case Some(based) =>
-        val w = Window.partitionBy(col("__bucket"))
-          .orderBy(col(orderCol) +: tieBreak.map(col): _*)
-        based.withColumn(outCol, col("__base") + row_number().over(w).cast("long"))
-          .drop("__bucket", "__base")
-    }
-
-  /** Shared scaffolding of the two-phase scalable numbering ops: (1) tag
-    * every row with a MONOTONE value bucket (`width_bucket` over
-    * `orderCol`'s [min, max]); (2) aggregate `perBucket` (must be a long)
-    * per bucket — an O(buckets) driver-side array, never O(data) — turn it
-    * into EXCLUSIVE running-total bases, and broadcast-join them back.
-    * Monotonicity is all that is needed for `base + within-bucket window`
-    * to equal the global answer, so the double cast inside `width_bucket`
-    * is harmless even for keys above 2^53. Returns None on empty input;
-    * otherwise the input with `__bucket` and `__base` columns for the
-    * caller's bucket-local window. */
-  private def withBucketBases(df: DataFrame, orderCol: String, buckets: Int,
-                              perBucket: Column): Option[DataFrame] = {
-    val spark = df.sparkSession
-    val stats = df.agg(min(col(orderCol)).cast("double"),
-      max(col(orderCol)).cast("double"),
-      count(when(col(orderCol).isNull, lit(1)))).head()
-    require(stats.getLong(2) == 0L,
-      s"order column '$orderCol' contains nulls (${stats.getLong(2)} rows) — " +
-        "a null order key has no position in a total order; filter or coalesce it first")
-    if (stats.isNullAt(0)) return None
-    val (mn, mx) = (stats.getDouble(0), stats.getDouble(1))
-    val bucketCol =
-      if (mn == mx) lit(1L)
-      else least(width_bucket(col(orderCol).cast("double"), lit(mn), lit(mx),
-        lit(buckets)), lit(buckets.toLong))
-    val bucketed = df.withColumn("__bucket", bucketCol)
-    val totals = bucketed.groupBy("__bucket").agg(perBucket.as("__t")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val bases = totals.map(_._1).zip(totals.scanLeft(0L)(_ + _._2))
-    val basesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(bases.toSeq.map {
-        case (b, o) => org.apache.spark.sql.Row(b, o)
-      }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__bucket",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__base",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    Some(bucketed.join(broadcast(basesDf), Seq("__bucket")))
+  /** `rows` with the columns of the small `stats` frame broadcast-joined on
+    * `keys`, null-safe (a null key matches a null key); a cross join with
+    * a one-row `stats` when `keys` is empty. */
+  private def joinBack(rows: DataFrame, stats: DataFrame, keys: Seq[String]): DataFrame = {
+    val small = broadcast(stats.select(stats.columns.map(c =>
+      if (keys.contains(c)) col(c).as(s"__k_$c") else col(c)): _*))
+    keys.map(k => col(k) <=> col(s"__k_$k")).reduceOption(_ && _)
+      .fold(rows.crossJoin(small))(rows.join(small, _))
+      .drop(keys.map(k => s"__k_$k"): _*)
   }
 
   /** Deterministic seeded sample-N (spotify_etl_v2.py:91-97 uses

@@ -151,13 +151,15 @@ object TrainPrep {
     * boundaries; boundary-respecting first-fit is inherently sequential and
     * NOT a dataflow operator).
     *
-    * The global running sum uses [[Ops.prefixSumScalable]] — two-phase
-    * bucket offsets + bucket-local windows, no single-partition window —
-    * so the packing survives a 100× scale-up. `tokensCol` must be
+    * The global running sum is [[Ops.runningSums]] minus the row's own
+    * tokens — two-phase bucket offsets + bucket-local windows in one lazy
+    * plan, no single-partition window — so the packing survives a 100×
+    * scale-up. `tokensCol` must be
     * non-null; `idCol` numeric non-null unique. */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
                     budget: Int): DataFrame =
-    Ops.prefixSumScalable(df, idCol, tokensCol, "start_offset")
+    Ops.runningSums(df, Nil, Seq(idCol), "start_offset" -> col(tokensCol).cast("long"))
+      .withColumn("start_offset", col("start_offset") - col(tokensCol))
       .withColumn("pack_id", expr(s"start_offset div $budget"))
       .withColumn("pack_offset", pmod(col("start_offset"), lit(budget.toLong)))
 }

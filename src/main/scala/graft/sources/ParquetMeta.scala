@@ -20,32 +20,34 @@ object ParquetMeta {
     try reader.getRecordCount finally reader.close()
   }
 
-  /** Exact row count of a parquet table (file or directory), summed over
-    * data files. Footer reads are distributed across the cluster — the
-    * driver only lists paths. */
-  def rowCount(spark: SparkSession, path: String): Long = {
+  /** Exact row count of each parquet table (file or directory) in
+    * `paths`, summed over its data files. The footer reads of every table
+    * run in ONE distributed job — the driver only lists paths. */
+  def rowCount(spark: SparkSession, paths: Seq[String]): Map[String, Long] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hconf)
-    val files: Seq[String] = {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
+    val files: Seq[(String, String)] = paths.flatMap { path =>
+      val p = new Path(path)
+      val it = p.getFileSystem(hconf).listFiles(p, true)
+      val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
       while (it.hasNext) {
         val f = it.next()
         val name = f.getPath.getName
         if (f.isFile && name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith("."))
-          buf += f.getPath.toString
+          buf += path -> f.getPath.toString
       }
-      buf.toSeq
+      buf
     }
-    if (files.isEmpty) 0L
-    else {
-      // serializable snapshot of the hadoop conf for the executors
-      val confBc = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(hconf))
-      spark.sparkContext.parallelize(files, math.min(files.size, 64))
-        .map(f => fileRowCount(confBc.value.value, f))
-        .reduce(_ + _)
-    }
+    val counted =
+      if (files.isEmpty) Map.empty[String, Long]
+      else {
+        // serializable snapshot of the hadoop conf for the executors
+        val confBc = spark.sparkContext.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(hconf))
+        spark.sparkContext.parallelize(files, math.min(files.size, 64))
+          .map { case (path, f) => Map(path -> fileRowCount(confBc.value.value, f)) }
+          .reduce((a, b) => b.foldLeft(a) { case (m, (k, v)) =>
+            m.updated(k, m.getOrElse(k, 0L) + v) })
+      }
+    paths.map(p => p -> counted.getOrElse(p, 0L)).toMap
   }
 }

@@ -133,15 +133,18 @@ class JsonArtifactsSpec extends SparkSuite {
 
   test("ParquetMeta.rowCount matches a full count, single file and partitioned tree") {
     import graft.sources.ParquetMeta
-    for (t <- Seq("nation", "lineitem", "events"))
-      assert(ParquetMeta.rowCount(spark, s"$SF/$t.parquet")
-        == spark.read.parquet(s"$SF/$t.parquet").count(), t)
+    val tables = Seq("nation", "lineitem", "events").map(t => s"$SF/$t.parquet")
+    // every table's footers are read in one job
+    val (counts, jobs) = jobGroupsOf("parquet-meta")(ParquetMeta.rowCount(spark, tables))
+    assert(jobs.size == 1, jobs)
+    for (t <- tables)
+      assert(counts(t) == spark.read.parquet(t).count(), t)
     // multi-file partitioned layout: footer counts must sum across the tree
     val dir = java.nio.file.Files.createTempDirectory("graft_meta").toString
     val ev = Tables.events(spark, SF)
     ev.withColumn("d", org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("ts")))
       .repartition(4).write.mode("overwrite").partitionBy("d").parquet(dir)
-    assert(ParquetMeta.rowCount(spark, dir) == ev.count())
+    assert(ParquetMeta.rowCount(spark, Seq(dir))(dir) == ev.count())
   }
 }

@@ -52,43 +52,66 @@ class OpsSpec extends SparkSuite {
     val df = Tables.customer(spark, SF).select("c_custkey", "c_name")
     val windowed = Ops.batchAssign(df, $"c_custkey", 37)
       .select("c_custkey", "batch_id")
-    val scalable = Ops.batchAssignScalable(df.repartition(7), "c_custkey", 37)
-      .select("c_custkey", "batch_id")
+    val scalable = Ops.runningSums(df.repartition(7), Nil, Seq("c_custkey"), "rn" -> lit(1L))
+      .select($"c_custkey", expr("(rn - 1) div 37 + 1").as("batch_id"))
     assert(windowed.exceptAll(scalable).isEmpty && scalable.exceptAll(windowed).isEmpty)
   }
 
   test("globalRowNumberScalable matches the single-task global row_number") {
     // heavy ties on the order column (c_nationkey: 25 values over 1500
     // customers) force the tiebreak path; repartition(7) proves the rank
-    // does not depend on physical layout
-    val df = Tables.customer(spark, SF).select("c_custkey", "c_nationkey")
-    val windowed = df.withColumn("rank",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy($"c_nationkey", $"c_custkey")).cast("long"))
-    val scalable = Ops.globalRowNumberScalable(
-      df.repartition(7), "c_nationkey", Seq("c_custkey"), "rank")
-    assert(windowed.exceptAll(scalable).isEmpty && scalable.exceptAll(windowed).isEmpty)
+    // does not depend on physical layout. Negative keys, and a one-day span
+    // of µs keys at a ~1.6e15 offset (the epoch-µs range of
+    // q_max_concurrency), must bucket just as well.
+    val customers = Tables.customer(spark, SF)
+      .select($"c_nationkey".cast("long").as("k"), $"c_custkey".as("id"))
+    val negative = (0L until 600L).map(i => (-(i * 7919L % 1201L), i)).toDF("k", "id")
+    val daySpan = (0L until 600L)
+      .map(i => (1600000000000000L + i * 7919L % 600L * 144000000L, i)).toDF("k", "id")
+    for (df <- Seq(customers, negative, daySpan)) {
+      val windowed = df.withColumn("rank",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .orderBy($"k", $"id")).cast("long"))
+      val scalable = Ops.runningSums(df.repartition(7), Nil, Seq("k", "id"), "rank" -> lit(1L))
+      assert(windowed.exceptAll(scalable).isEmpty && scalable.exceptAll(windowed).isEmpty)
+    }
   }
 
   test("globalRowNumberScalable: constant order key still ranks contiguously") {
     val df = (1L to 100L).map(i => (i, 42L)).toDF("id", "k")
-    val out = Ops.globalRowNumberScalable(df, "k", Seq("id"), "rank")
+    val out = Ops.runningSums(df, Nil, Seq("k", "id"), "rank" -> lit(1L))
       .select("id", "rank").as[(Long, Long)].collect().toMap
     assert(out == (1L to 100L).map(i => i -> i).toMap)
   }
 
   test("scalable numbering rejects null order keys with a clear error") {
     // a null key has no position in a total order — must fail loud, never
-    // silently drop or misnumber rows
+    // silently drop or misnumber rows. Building stays lazy; the plan's
+    // raise_error fails the first action.
     val df = Seq(Some(1L), None, Some(3L)).toDF("k").withColumn("v", lit(1L))
-    val e1 = intercept[IllegalArgumentException] {
-      Ops.prefixSumScalable(df, "k", "v").collect()
+    def failure(out: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[RuntimeException](out.collect())
+      assert(e.isInstanceOf[org.apache.spark.SparkThrowable] &&
+        e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition == "USER_RAISED_EXCEPTION", e)
+      e.getMessage
     }
-    assert(e1.getMessage.contains("contains nulls"))
-    val e2 = intercept[IllegalArgumentException] {
-      Ops.batchAssignScalable(df, "k", 2).collect()
+    val e1 = failure(Ops.runningSums(df, Nil, Seq("k"), "cum" -> $"v"))
+    assert(e1.contains("contains nulls"), e1)
+    val e2 = failure(Ops.runningSums(df.withColumn("g", lit("a")), Seq("g"), Seq("k"),
+      "rn" -> lit(1L)))
+    assert(e2.contains("contains nulls"), e2)
+  }
+
+  test("runningSums over a warm table builds without firing a Spark job") {
+    // the bases are a plan, not driver round-trips: building the kernel,
+    // global or grouped, runs nothing until an action
+    val customers = Tables.customer(spark, SF).select("c_custkey", "c_nationkey")
+    val (_, jobs) = jobGroupsOf("running-sums-build") {
+      Ops.runningSums(customers, Nil, Seq("c_custkey"), "rn" -> lit(1L))
+      Ops.runningSums(customers, Seq("c_nationkey"), Seq("c_custkey"),
+        "rn" -> lit(1L), "cum" -> $"c_custkey")
     }
-    assert(e2.getMessage.contains("contains nulls"))
+    assert(jobs.isEmpty, s"construction fired jobs: $jobs")
   }
 
   test("batchAssign covers every row exactly once") {

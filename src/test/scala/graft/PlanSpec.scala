@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
+import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+
 /** Physical-plan shape assertions — the properties that decide whether these
   * operators survive a 100× scale-up: filters reach the parquet scan,
   * projections prune the read schema, small dims broadcast, top-k never
@@ -9,6 +16,56 @@ class PlanSpec extends SparkSuite {
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** The physical plan with its exchanges, before adaptive execution. */
+  private def physical(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+
+  /** `p` without the sorts, exchanges and codegen wrappers above its data. */
+  private def source(p: SparkPlan): SparkPlan = p match {
+    case s: SortExec => source(s.child)
+    case e: ShuffleExchangeExec => source(e.child)
+    case w: WholeStageCodegenExec => source(w.child)
+    case i: InputAdapter => source(i.child)
+    case other => other
+  }
+
+  private def groupedBy(p: SparkPlan): Option[Seq[String]] = p match {
+    case a: BaseAggregateExec => Some(a.groupingExpressions.map(_.name))
+    case _ => None
+  }
+
+  /** Every `SinglePartition` exchange of a [[graft.operators.Ops.runningSums]]
+    * plan moves a bounded aggregate: one grouped by nothing (the 1-row key
+    * stats) or by `__bucket` alone (the ≤ 1 024-row bucket census). So does
+    * every operator that needs all rows in one task: over a 1-partition
+    * input (a one-file table) it gets them without an exchange. */
+  private def singlePartitionOnlyOnBoundedAggregates(p: SparkPlan): Unit = {
+    val gathered = p.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => Seq(e.child)
+      case op => op.requiredChildDistribution.zip(op.children)
+        .collect { case (AllTuples, c) => c }
+    }.flatten
+    gathered.foreach { c =>
+      val g = groupedBy(source(c))
+      assert(g.contains(Nil) || g.contains(Seq("__bucket")),
+        s"unbounded rows gathered into one task:\n$c")
+    }
+  }
+
+  /** Every window over input rows is `__bucket`-partitioned; only the
+    * bucket census's own window (over an aggregate keyed by `__bucket`)
+    * may be unpartitioned. */
+  private def rowWindowsBucketPartitioned(p: SparkPlan): Unit = {
+    val windows = p.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, p)
+    windows.filterNot(w => groupedBy(source(w.child)).exists(_.lastOption.contains("__bucket")))
+      .foreach(w => assert(w.partitionSpec.exists(_.references.exists(_.name == "__bucket")),
+        s"a window over input rows that is not bucket-partitioned:\n$w"))
+  }
 
   /** Run `body` with [[graft.operators.Checkpoints.PassthroughConf]] set,
     * so pins can see the DECLARATIVE shape of subtrees that production
@@ -92,12 +149,11 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q_batch_assign has no unpartitioned (single-task) window") {
-    val p = plan(Queries.qBatchAssign(spark, SF))
-    // every Window in the plan must name a partition key — a global
-    // row_number would serialize 100 TB through one task
-    val windowLines = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windowLines.nonEmpty, p)
-    assert(!p.contains("SinglePartition"), p)
+    val p = physical(Queries.qBatchAssign(spark, SF))
+    // a global row_number would serialize 100 TB through one task; only
+    // the bounded stats and bucket census may meet in one partition
+    singlePartitionOnlyOnBoundedAggregates(p)
+    rowWindowsBucketPartitioned(p)
   }
 
   test("native shingles/simhash expressions run inside whole-stage codegen") {
@@ -345,14 +401,12 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q_global_rank: ranking window is bucket-partitioned, never SinglePartition") {
-    val df = Queries.qGlobalRank(spark, SF)
-    val p = plan(df)
-    // the only allowed global exchange is the final presentation orderBy;
-    // the window itself must be keyed by the value bucket
-    val winLines = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(winLines.nonEmpty, p)
-    assert(!p.contains("SinglePartition"),
-      s"ranking must never move all rows to one task:\n$p")
+    val p = physical(Queries.qGlobalRank(spark, SF))
+    // ranking must never move all rows to one task: the ranking window is
+    // keyed by the value bucket, and only the bounded stats and bucket
+    // census meet in one partition
+    singlePartitionOnlyOnBoundedAggregates(p)
+    rowWindowsBucketPartitioned(p)
   }
 
   test("q_mad_outliers: both stats tables broadcast back, fact never hash-shuffled") {

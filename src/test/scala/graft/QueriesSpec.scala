@@ -33,15 +33,17 @@ class QueriesSpec extends SparkSuite {
   }
 
   test("groupedCumByValue == single flag-keyed running-sum window (r17 two-phase split)") {
-    // the q_weighted_median / q_trimmed_mean / q_iqr_outliers cum kernel:
-    // bucket bases + (group, bucket)-local windows must reproduce the
-    // naive group-wide inclusive running sum exactly, including values
-    // straddling the 65536 bucket boundary and a single-value group
+    // the q_weighted_median / q_trimmed_mean / q_iqr_outliers cum, grouped
+    // runningSums plus the broadcast group total: bucket bases +
+    // (group, bucket)-local windows must reproduce the naive group-wide
+    // inclusive running sum exactly, including values far apart in one
+    // group (one bucket each) and a single-value group
     val vc = Seq(
       ("A", 1L, 3L), ("A", 65535L, 2L), ("A", 65536L, 5L), ("A", 131072L, 1L),
       ("A", 900000L, 4L), ("B", 7L, 10L), ("B", 65536L * 3, 2L), ("C", 42L, 9L),
     ).toDF("flag", "v", "wt")
-    val got = Queries.groupedCumByValue(vc, "flag", "v", "wt")
+    val got = graft.operators.Ops.runningSums(vc, Seq("flag"), Seq("v"), "cum" -> col("wt"))
+      .join(broadcast(vc.groupBy("flag").agg(sum(col("wt")).as("tot"))), Seq("flag"))
       .select("flag", "v", "cum", "tot")
       .as[(String, Long, Long, Long)].collect().toSet
     val w = org.apache.spark.sql.expressions.Window

@@ -101,14 +101,14 @@ class TrainPrepSpec extends SparkSuite {
     assert(n > 120 && n < 280, s"kept $n of 1000 at 20%")
   }
 
-  // ------------------------------------- prefixSumScalable / packSequences
+  // --------------------------- runningSums prefix sums / packSequences
 
   test("prefixSumScalable matches the single-window reference on scattered keys") {
     val rows = Seq(7L -> 3L, 1L -> 5L, 42L -> 2L, 13L -> 7L, 99L -> 1L,
       55L -> 4L, 28L -> 6L, 3L -> 2L)
     val df = rows.toDF("k", "v").repartition(4)
-    val got = Ops.prefixSumScalable(df, "k", "v", buckets = 4)
-      .select("k", "prefix_excl").as[(Long, Long)].collect().toMap
+    val got = Ops.runningSums(df, Nil, Seq("k"), "cum" -> $"v")
+      .select($"k", ($"cum" - $"v").as("prefix_excl")).as[(Long, Long)].collect().toMap
     val expect = rows.sortBy(_._1).scanLeft((0L, 0L)) {
       case ((_, acc), (k, v)) => (k, acc + v)
     }.sliding(2).map { case Seq((_, acc), (k, _)) => (k, acc) }.toMap
@@ -117,7 +117,7 @@ class TrainPrepSpec extends SparkSuite {
 
   test("prefixSumScalable: empty input yields the schema with a null column") {
     val df = Seq.empty[(Long, Long)].toDF("k", "v")
-    val out = Ops.prefixSumScalable(df, "k", "v")
+    val out = Ops.runningSums(df, Nil, Seq("k"), "prefix_excl" -> $"v")
     assert(out.columns.toSeq == Seq("k", "v", "prefix_excl"))
     assert(out.count() == 0)
   }
