@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** Dev timing instrument: pass-major sequential passes of named queries
@@ -10,13 +11,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * Each pass runs every query once, in order; checkpoint blocks are
   * released between queries, outside the timer. Per pass it prints
-  * `[pass p] wall <s> s` (the sum of that pass's query walls — what
-  * `dev/ab_prev.sh` compares across commits); after the last pass, one
-  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T build_jobs=B`
+  * `[pass p] wall <s> s compiles=C` (the sum of that pass's query walls —
+  * what `dev/ab_prev.sh` compares across commits — and of its classes
+  * compiled); after the last pass, one
+  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T build_jobs=B compiles=C`
   * line per query (what `dev/adjudicate.py` band-tests), min over passes,
   * with the counts of that fastest run: J, S and T over the whole query,
   * B the jobs fired while its DataFrame was being built (eager
-  * checkpoints, collects, counts). The counts come from one listener keyed
+  * checkpoints, collects, counts), C the classes Spark compiled during its
+  * build and run, i.e. misses of the JVM-wide generated-code cache (the
+  * delta of `CodegenMetrics.METRIC_COMPILATION_TIME`'s count; exact, as
+  * queries run one at a time). The job counts come from one listener keyed
   * by per-(query, pass) job groups, one for the build and one for the
   * sink, so jobs that run on other threads (broadcasts, subqueries) are
   * attributed to their query; stages and tasks count what was submitted
@@ -72,19 +77,23 @@ object DevTime {
     })
     def group(phase: String, name: String, p: Int) = s"devtime $phase $name $p"
 
-    val walls = (1 to passes).map { p =>
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // Per pass, per query: (wall seconds, classes compiled).
+    val runs = (1 to passes).map { p =>
       val per = names.map { name =>
         sc.setJobGroup(group("build", name, p), group("build", name, p))
+        val c0 = compiled
         val t0 = System.nanoTime()
         val df = Queries.all(name)(spark, dir)
         sc.setJobGroup(group("run", name, p), group("run", name, p))
         df.write.mode("overwrite").format("noop").save()
         val secs = (System.nanoTime() - t0) / 1e9
+        val compiles = compiled - c0
         sc.clearJobGroup()
         graft.operators.Checkpoints.release(spark)
-        secs
+        (secs, compiles)
       }
-      println(f"[pass $p] wall ${per.sum}%8.2f s")
+      println(f"[pass $p] wall ${per.map(_._1).sum}%8.2f s compiles=${per.map(_._2).sum}")
       per
     }
     // Listener events arrive in post order: once the marker job's start is
@@ -94,13 +103,14 @@ object DevTime {
     sc.clearJobGroup()
     require(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain within 60 s")
     names.zipWithIndex.foreach { case (name, i) =>
-      val best = walls.indices.minBy(walls(_)(i))
+      val best = runs.indices.minBy(runs(_)(i)._1)
+      val (wall, compiles) = runs(best)(i)
       val Seq(b, r) = Seq("build", "run").map(ph =>
         counts.getOrDefault(group(ph, name, best + 1), new Counts))
       def total(f: Counts => AtomicLong) = f(b).get + f(r).get
-      println(f"[time] $name%-24s $dir ${walls(best)(i)}%8.2f s " +
+      println(f"[time] $name%-24s $dir $wall%8.2f s " +
         s"jobs=${total(_.jobs)} stages=${total(_.stages)} tasks=${total(_.tasks)} " +
-        s"build_jobs=${b.jobs}")
+        s"build_jobs=${b.jobs} compiles=$compiles")
     }
     spark.stop()
   }

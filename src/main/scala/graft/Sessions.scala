@@ -25,6 +25,14 @@ import org.apache.spark.sql.SparkSession
   *    block per broadcast, and G1 treats an object of half a region or
   *    more as humongous garbage, freed only at a young GC. 4 MiB blocks
   *    piled up and raised peak RSS; 256 KiB is under half of any region;
+  *  - a 10 000-entry generated-code cache: Spark keeps compiled classes in
+  *    one JVM-wide `CodeGenerator` cache, 100 entries by default, and the
+  *    board's warm working set is about 4 200 classes (the nine perfbench
+  *    `query_seq` queries alone are 137), so at the default every warm
+  *    query recompiled most of its classes at ~10 ms each. The conf is
+  *    static: the cache is sized once, from the session active when code
+  *    is first generated in the JVM, so code generated before the first
+  *    session pins the 100-entry default for the JVM;
   *  - the `WindowExec` logger at ERROR: its "No Partition Defined for
   *    Window operation!" warning fires on every global window and buried
   *    every other warning in the logs. PlanSpec's bounded-frame pins are
@@ -55,6 +63,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.broadcast.blockSize", "256k")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.PosixLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.PosixLocalFs].getName)
       .getOrCreate()

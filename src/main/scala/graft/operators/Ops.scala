@@ -115,11 +115,12 @@ object Ops {
     val stats = df.groupBy(partitionCols.map(col): _*)
       .agg(min(col(key)).cast("double").as("__mn"), max(col(key)).cast("double").as("__mx"),
         count_if(col(key).isNull).as("__nulls"))
-    val bucketed = joinBack(df, stats, partitionCols)
-      .withColumn("__bucket",
-        when(col("__nulls") > 0, raise_error(concat(
-          lit(s"order column '$key' contains nulls ("), col("__nulls"), lit(" rows) — " +
-            "a null order key has no position in a total order; filter or coalesce it first"))))
+    // Only the rows' branch raises on nulls: were both branches' stages to
+    // raise, two failures landing together would fail the query with
+    // STAGE_MATERIALIZATION_MULTIPLE_FAILURES instead of this error. Both
+    // read `__nulls`, so they share one stats frame.
+    def bucketed(onNulls: Column) = joinBack(df, stats, partitionCols)
+      .withColumn("__bucket", when(col("__nulls") > 0, onNulls)
         .when(col("__mn") === col("__mx"), lit(1L))
         .otherwise(least(width_bucket(col(key).cast("double"), col("__mn"), col("__mx"),
           buckets), buckets)))
@@ -129,13 +130,16 @@ object Ops {
     val wBases = Window.partitionBy(groups: _*).orderBy(col("__bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val totals = ws.map(i => sum(sums(i)._2).as(s"__t$i"))
-    val bases = bucketed.groupBy(groups :+ col("__bucket"): _*)
+    val bases = bucketed(lit(null)).groupBy(groups :+ col("__bucket"): _*)
       .agg(totals.head, totals.tail: _*)
       .select(groups ++ Seq(col("__bucket")) ++
         ws.map(i => (sum(col(s"__t$i")).over(wBases) - col(s"__t$i")).as(s"__base$i")): _*)
     val wLocal = Window.partitionBy(groups :+ col("__bucket"): _*).orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = bucketed.select(col("*") +: ws.map(i =>
+    val local = bucketed(raise_error(concat(
+      lit(s"order column '$key' contains nulls ("), col("__nulls"), lit(" rows) — " +
+        "a null order key has no position in a total order; filter or coalesce it first"))))
+      .select(col("*") +: ws.map(i =>
       sum(sums(i)._2).over(wLocal).as(s"__local$i")): _*)
     joinBack(local, bases, partitionCols :+ "__bucket")
       .select(col("*") +: ws.map(i =>

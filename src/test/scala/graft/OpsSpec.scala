@@ -102,6 +102,18 @@ class OpsSpec extends SparkSuite {
     assert(e2.contains("contains nulls"), e2)
   }
 
+  test("runningSums raises its null-key error from one stage only") {
+    // AQE fails a query whose stages fail together with
+    // STAGE_MATERIALIZATION_MULTIPLE_FAILURES, which hides the error above;
+    // one raise_error in the plan rules that out.
+    val df = Seq(Some(1L), None, Some(3L)).toDF("k").withColumn("v", lit(1L))
+    for (out <- Seq(Ops.runningSums(df, Nil, Seq("k"), "cum" -> $"v"),
+        Ops.runningSums(df.withColumn("g", lit("a")), Seq("g"), Seq("k"), "rn" -> lit(1L)))) {
+      val plan = out.queryExecution.executedPlan.toString
+      assert("raise_error\\(".r.findAllMatchIn(plan).size == 1, plan)
+    }
+  }
+
   test("runningSums over a warm table builds without firing a Spark job") {
     // the bases are a plan, not driver round-trips: building the kernel,
     // global or grouped, runs nothing until an action
