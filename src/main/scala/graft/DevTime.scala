@@ -4,28 +4,31 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 /** Dev timing instrument: pass-major sequential passes of named queries
   * into the `noop` sink, in ONE JVM, against any fixture dir.
   *
   * Each pass runs every query once, in order; checkpoint blocks are
   * released between queries, outside the timer. Per pass it prints
-  * `[pass p] wall <s> s compiles=C` (the sum of that pass's query walls —
-  * what `dev/ab_prev.sh` compares across commits — and of its classes
-  * compiled); after the last pass, one
-  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T build_jobs=B compiles=C`
+  * `[pass p] wall <s> s compiles=C exec_cpu=<s>` (the sums over that
+  * pass's queries of wall — what `dev/ab_prev.sh` compares across
+  * commits — of classes compiled and of executor CPU); after the last
+  * pass, one
+  * `[time] <name> <dir> <min> s jobs=J stages=S tasks=T build_jobs=B compiles=C exec_cpu=<s>`
   * line per query (what `dev/adjudicate.py` band-tests), min over passes,
   * with the counts of that fastest run: J, S and T over the whole query,
   * B the jobs fired while its DataFrame was being built (eager
   * checkpoints, collects, counts), C the classes Spark compiled during its
   * build and run, i.e. misses of the JVM-wide generated-code cache (the
   * delta of `CodegenMetrics.METRIC_COMPILATION_TIME`'s count; exact, as
-  * queries run one at a time). The job counts come from one listener keyed
-  * by per-(query, pass) job groups, one for the build and one for the
-  * sink, so jobs that run on other threads (broadcasts, subqueries) are
+  * queries run one at a time), and exec_cpu the `executorCpuTime` summed
+  * over its finished tasks. The counts come from one listener keyed by
+  * per-(query, pass) job groups, one for the build and one for the sink,
+  * so jobs that run on other threads (broadcasts, subqueries) are
   * attributed to their query; stages and tasks count what was submitted
-  * (skipped stages excluded).
+  * (skipped stages excluded), and a task end is attributed through its
+  * stage.
   *
   * The default 3 passes match min-of-2 after a warm-up: the cold first
   * pass is slower and so never the min unless the host is.
@@ -49,9 +52,10 @@ object DevTime {
     Args(args(0), names, passes)
   }
 
-  /** Jobs, stages and tasks of one job group, as the listener saw them. */
+  /** Jobs, stages, tasks and executor CPU nanoseconds of one job group,
+    * as the listener saw them. */
   private final class Counts {
-    val jobs, stages, tasks = new AtomicLong
+    val jobs, stages, tasks, cpuNs = new AtomicLong
   }
 
   def main(args: Array[String]): Unit = {
@@ -59,23 +63,40 @@ object DevTime {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val sc = spark.sparkContext
     val counts = new ConcurrentHashMap[String, Counts]()
+    val ofStage = new ConcurrentHashMap[Int, Counts]()
     def of(props: java.util.Properties): Option[Counts] =
       Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
         .map(counts.computeIfAbsent(_, _ => new Counts))
-    val drained = new CountDownLatch(1)
-    val Drain = "devtime drain"
+    val drains = new ConcurrentHashMap[String, CountDownLatch]()
     sc.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Drain))
-          drained.countDown()
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .flatMap(g => Option(drains.get(g))).foreach(_.countDown())
         of(e.properties).foreach(_.jobs.incrementAndGet())
       }
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         of(e.properties).foreach { c =>
+          ofStage.put(e.stageInfo.stageId, c)
           c.stages.incrementAndGet(); c.tasks.addAndGet(e.stageInfo.numTasks)
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (c <- Option(ofStage.get(e.stageId)); m <- Option(e.taskMetrics))
+          c.cpuNs.addAndGet(m.executorCpuTime)
     })
+    // Listener events arrive in post order: once a marker job's start is
+    // seen, every earlier query's jobs, stages and task ends have been counted.
+    def drain(tag: String): Unit = {
+      val g = s"devtime drain $tag"
+      val latch = drains.computeIfAbsent(g, _ => new CountDownLatch(1))
+      sc.setJobGroup(g, g)
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      require(latch.await(60, TimeUnit.SECONDS), "listener bus did not drain within 60 s")
+    }
     def group(phase: String, name: String, p: Int) = s"devtime $phase $name $p"
+    def cpuSecs(name: String, p: Int): Double =
+      Seq("build", "run").map(ph => counts.getOrDefault(group(ph, name, p), new Counts))
+        .map(_.cpuNs.get).sum / 1e9
 
     def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // Per pass, per query: (wall seconds, classes compiled).
@@ -93,15 +114,12 @@ object DevTime {
         graft.operators.Checkpoints.release(spark)
         (secs, compiles)
       }
-      println(f"[pass $p] wall ${per.map(_._1).sum}%8.2f s compiles=${per.map(_._2).sum}")
+      drain(s"pass $p")
+      val cpu = names.map(cpuSecs(_, p)).sum
+      println(f"[pass $p] wall ${per.map(_._1).sum}%8.2f s compiles=${per.map(_._2).sum} " +
+        f"exec_cpu=$cpu%.2f")
       per
     }
-    // Listener events arrive in post order: once the marker job's start is
-    // seen, every earlier query's jobs and stages have been counted.
-    sc.setJobGroup(Drain, Drain)
-    sc.parallelize(Seq(1), 1).count()
-    sc.clearJobGroup()
-    require(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain within 60 s")
     names.zipWithIndex.foreach { case (name, i) =>
       val best = runs.indices.minBy(runs(_)(i)._1)
       val (wall, compiles) = runs(best)(i)
@@ -110,7 +128,7 @@ object DevTime {
       def total(f: Counts => AtomicLong) = f(b).get + f(r).get
       println(f"[time] $name%-24s $dir $wall%8.2f s " +
         s"jobs=${total(_.jobs)} stages=${total(_.stages)} tasks=${total(_.tasks)} " +
-        s"build_jobs=${b.jobs} compiles=$compiles")
+        s"build_jobs=${b.jobs} compiles=$compiles " + f"exec_cpu=${cpuSecs(name, best + 1)}%.2f")
     }
     spark.stop()
   }

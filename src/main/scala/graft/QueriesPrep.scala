@@ -864,7 +864,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * `w = Σ_rows (x·v)·x` for a deterministic Knuth-hash seed direction v
     * — the distributed Gram-matrix-times-vector kernel behind spectral
     * methods, without ever materializing the d×d Gram matrix. The per-row
-    * dot is row-local (zip_with/aggregate HOFs, zero shuffle); the only
+    * dot is row-local (the native [[Similarity.dot]] fold, zero shuffle); the only
     * exchange carries dim-bounded (pos, partial-sum) rows. Output doubles
     * are rounded (summation-order drift), per the file contract. */
   def qPowerIteration(s: SparkSession, d: String): DataFrame = {
@@ -873,9 +873,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     Tables.embeddings(s, d)
       .select(col("vec_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .withColumn("dot",
-        expr(s"aggregate(zip_with(emb, $vExpr, (a, b) -> a * b), " +
-          "0D, (acc, x) -> acc + x)"))
+      .withColumn("dot", Similarity.dot(col("emb"), expr(vExpr)))
       .select(col("dot"), posexplode(col("emb")).as(Seq("pos0", "val")))
       .groupBy((col("pos0") + 1).cast("long").as("pos"))
       .agg(round(sum(col("dot") * col("val")), 2).as("w"))

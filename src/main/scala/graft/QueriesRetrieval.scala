@@ -76,20 +76,18 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     * metric a trained two-tower model retrieves against, where vector
     * NORM carries popularity signal that cosine would erase). The probe
     * is a literal array folded into the scan projection (one driver
-    * round-trip for one vector); the dot is the index-ordered zip_with/
-    * aggregate fold (both engines accumulate left-to-right in double, so
-    * the rounded score matches bit-for-bit); the top-20 is
+    * round-trip for one vector); the dot is the index-ordered
+    * [[Similarity.dot]] fold (both engines accumulate left-to-right in
+    * double, so the rounded score matches bit-for-bit); the top-20 is
     * TakeOrderedAndProject under the (dot desc, vec_id) total order —
     * no global sort at any scale. */
   def qMips(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val (probe, found) = probeOrEmpty(emb, 1)
     val probeCol = array(probe.map(v => lit(v.toDouble)): _*)
-    val dot = aggregate(
-      zip_with(col("embedding").cast("array<double>"), probeCol, (a, b) => a * b),
-      lit(0.0), (acc, x) => acc + x)
     emb.where(col("vec_id") =!= 1 && lit(found))
-      .select(col("vec_id"), round(dot, 4).as("dot"), col("label"))
+      .select(col("vec_id"), round(Similarity.dot(col("embedding"), probeCol), 4).as("dot"),
+        col("label"))
       .orderBy(col("dot").desc, col("vec_id"))
       .limit(20)
   }
@@ -481,11 +479,9 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
         .select(col(idAs), col("h.half").as("half"), col(s"h.$vecAs").as(vecAs))
     val cents = halves(emb.where(col("vec_id") < 8), "cid", "cv")
     val vecs = halves(emb, "vec_id", "sv")
-    val dd = aggregate(
-      zip_with(col("sv"), col("cv"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
     val dist = vecs.join(broadcast(cents), Seq("half"))
-      .select(col("vec_id"), col("half"), col("cid"), dd.as("dd"))
+      .select(col("vec_id"), col("half"), col("cid"),
+        Similarity.sqDist(col("sv"), col("cv")).as("dd"))
     val codes = dist
       .groupBy("vec_id", "half")
       .agg(min(struct(col("dd").as("d"), col("cid").as("cid"))).as("m"))
@@ -1015,13 +1011,10 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     val emb = Tables.embeddings(s, d)
     val (probe, found) = probeOrEmpty(emb, 1)
     val probeCol = array(probe.map(v => lit(v.toDouble)): _*)
-    val dot = aggregate(
-      zip_with(col("embedding").cast("array<double>"), probeCol, (a, b) => a * b),
-      lit(0.0), (acc, x) => acc + x)
     val scored = emb.where(col("vec_id") =!= 1 && lit(found))
       .select(col("vec_id"),
         round(cosine_sim(col("embedding"), probeCol), 4).as("simr"),
-        round(dot, 4).as("dotr"))
+        round(Similarity.dot(col("embedding"), probeCol), 4).as("dotr"))
     val topCos = scored.orderBy(col("simr").desc, col("vec_id")).limit(20)
       .withColumn("rank_cos", // 20 rows by construction
         row_number().over(Window.orderBy(col("simr").desc, col("vec_id"))))
@@ -1258,7 +1251,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     * embedding table regrouped 8 vectors per doc, `doc = vec_id div 8`),
     * and the score is `Σ_{q ∈ query} max_{t ∈ doc} ⟨q, t⟩` — every query
     * token finds its best-matching document token. Dot products are the
-    * index-ordered zip_with/aggregate fold (bit-identical to DuckDB's
+    * index-ordered [[Similarity.dot]] fold (bit-identical to DuckDB's
     * list_inner_product), snapped to e4 fixed-point integers BEFORE any
     * aggregation so the max and the 8-term sum are exact integer ops in
     * both engines. Shapes at 100 TB: the 8-row query bag BROADCASTS into
@@ -1272,12 +1265,9 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
         col("embedding").cast("array<double>").as("emb"))
     val qtoks = toks.where(col("doc") === 0)
       .select(col("vec_id").as("q_tok"), col("emb").as("q_emb"))
-    val dot = aggregate(
-      zip_with(col("emb"), col("q_emb"), (a, b) => a * b),
-      lit(0.0), (acc, x) => acc + x)
     toks.where(col("doc") >= 1)
       .crossJoin(broadcast(qtoks))
-      .withColumn("dot_d", dot)
+      .withColumn("dot_d", Similarity.dot(col("emb"), col("q_emb")))
       .select(col("doc"), col("q_tok"),
         expr("CAST(round(dot_d * 10000, 0) AS BIGINT)").as("di"))
       .groupBy("doc", "q_tok").agg(max(col("di")).as("mx"))
@@ -1499,7 +1489,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     * so the projected distance is exact integer arithmetic (aggregation-
     * order-free); the original distance is row-local and snaps at e8.
     * Shapes at 100 TB: the 16-row sign table broadcasts into the pair
-    * scan (per-coordinate dots are codegen'd zip_with folds), the
+    * scan (per-coordinate dots are codegen'd [[Similarity.dot]] folds), the
     * pair-grain sum combines map-side, and the audit pair set is a
     * bounded id-range self-join — never all pairs. */
   def qRandomProjection(s: SparkSession, d: String): DataFrame = {
@@ -1513,13 +1503,12 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
       .join(e.where(col("vec_id") < 100 && col("vec_id") % 2 === 1).as("b"),
         col("a.vec_id") + 1 === col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        zip_with(col("a.emb"), col("b.emb"), (x, y) => x - y).as("dv"))
-    val od = pairs.withColumn("od2_e8", expr(
-      "CAST(round(aggregate(dv, 0.0D, (acc, x) -> acc + x * x) * 100000000, 0) AS BIGINT)"))
-    val pd = od.crossJoin(broadcast(signs))
-      .withColumn("pj", expr(
-        "CAST(round(aggregate(zip_with(dv, sgn, (x, sg) -> x * sg), 0.0D, " +
-          "(acc, x) -> acc + x) * 10000, 0) AS BIGINT)"))
+        zip_with(col("a.emb"), col("b.emb"), (x, y) => x - y).as("dv"),
+        round(Similarity.sqDist(col("a.emb"), col("b.emb")) * 100000000, 0)
+          .cast("bigint").as("od2_e8"))
+    val pd = pairs.crossJoin(broadcast(signs))
+      .withColumn("pj",
+        round(Similarity.dot(col("dv"), col("sgn")) * 10000, 0).cast("bigint"))
       .groupBy("va", "vb", "od2_e8")
       .agg(sum(col("pj") * col("pj")).as("pd2_e8"))
     pd.withColumn("pd2n", expr("pd2_e8 div 16"))

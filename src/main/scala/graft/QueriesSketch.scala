@@ -1061,7 +1061,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * runs on the bounded (lang, distinct-trigram) table. */
   def qCharNgrams(s: SparkSession, d: String): DataFrame = {
     val norm = Tables.documents(s, d).select(col("lang"),
-        lower(trim(regexp_replace(col("text"), "\\s+", " "))).as("t"))
+        Ops.normalizeText(col("text")).as("t"))
       .where(length(col("t")) >= 3)
     // r17 (guide §1.2 per-task work): substring(t, i, 3) on a UTF8String
     // seeks codepoint i from the start — O(i) per call, O(len²) per doc

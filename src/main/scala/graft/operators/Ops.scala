@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.CollapseWs.collapse_ws
+
 /** The relational operator kernel: small pure `DataFrame => DataFrame`
   * (or `Column => Column`) functions, one per dataflow operator surveyed
   * from the reference (SURVEY.md §2.1; reference = dieulinhng/
@@ -16,11 +18,12 @@ import org.apache.spark.sql.functions._
   */
 object Ops {
 
-  /** Whitespace normalization: trim + collapse internal runs.
+  /** Whitespace normalization: trim + collapse internal runs of Java `\s`.
     * Mirrors the reference's `' '.join(n.strip().split())`
-    * (scripts/search_artist_id_and_name.py:21). Codegen'd — stays inside
-    * whole-stage codegen, no UDF. */
-  def normalizeWs(c: Column): Column = trim(regexp_replace(c, "\\s+", " "))
+    * (scripts/search_artist_id_and_name.py:21). The native one-pass
+    * [[graft.functions.CollapseWs]] (codegen'd, no regex per row); equals
+    * `trim(regexp_replace(c, "\\s+", " "))`, which FunctionProps pins. */
+  def normalizeWs(c: Column): Column = collapse_ws(c)
 
   /** Variable-precision date parsing (the reference's `release_date` —
     * YYYY, YYYY-MM, or YYYY-MM-DD, spotify_etl_v2.py:165): pad the missing

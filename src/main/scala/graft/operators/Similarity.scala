@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSim.cosine_sim
+import graft.functions.VectorFold
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -13,24 +14,29 @@ import graft.functions.CosineSim.cosine_sim
   * a 100 TB corpus only scans the probe's bucket (and its Hamming-1
   * neighbors for recall).
   *
-  * Hot-path vector math uses the native fused [[graft.functions.CosineSim]]
-  * expression (one allocation-free codegen'd loop, ~1.8× the HOF form);
-  * the `zip_with`/`aggregate` higher-order formulations remain as the
-  * portable reference implementation. No UDF serialization anywhere.
+  * Hot-path vector math is native Catalyst expressions, each one
+  * allocation-free loop inside whole-stage codegen: the fused
+  * [[graft.functions.CosineSim]] (~1.8× the HOF form), and
+  * [[graft.functions.VectorFold]] under [[dot]] and [[sqDist]]. Spark's
+  * `zip_with`/`aggregate` forms run interpreted (`CodegenFallback`); they
+  * live on only as the test references these kernels are pinned
+  * bit-identical to. No UDF serialization anywhere.
   */
 object Similarity {
 
-  /** Dot product of two array<numeric> columns, computed in double. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+  /** Dot product of two array<float|double> columns, an index-ordered
+    * fold in double; NULL on a NULL array or element or unequal lengths. */
+  def dot(a: Column, b: Column): Column = VectorFold.dot(a, b)
 
-  /** L2 norm of an array<numeric> column. */
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
+  /** Squared L2 distance of two array<float|double> columns, folded as
+    * [[dot]]. */
+  def sqDist(a: Column, b: Column): Column = VectorFold.sq_dist(a, b)
 
-  /** Cosine similarity of two array<numeric> columns (0 when either norm
+  /** L2 norm of an array<float|double> column: the square root of its [[dot]]
+    * with itself. */
+  def l2norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Cosine similarity of two array<float|double> columns (0 when either norm
     * is 0). */
   def cosine(a: Column, b: Column): Column = {
     val d = dot(a, b)
@@ -264,7 +270,7 @@ object Similarity {
     * struct-min per vector (map-side partial: the shuffle carries one row
     * per (vector, partition), the n×k expansion never shuffles). Same
     * numerics and tie-break as the inlined form — the distance is the
-    * identical zip_with/aggregate expression and min over struct(d, cid)
+    * identical [[sqDist]] expression and min over struct(d, cid)
     * is the same lexicographic (distance, smallest-cid) order — so the
     * two forms are result-interchangeable and oracle-stable.
     *
@@ -287,10 +293,7 @@ object Similarity {
     val s = emb.sparkSession
     val centDF = s.createDataFrame(cents.toSeq.map(c => (c._1, c._2.toSeq)))
       .toDF("__cid", "__c")
-    val vecD = col(vecCol).cast("array<double>")
-    val d = aggregate(
-      zip_with(vecD, col("__c"), (a, b) => (a - b) * (a - b)),
-      lit(0.0), (acc, x) => acc + x)
+    val d = sqDist(col(vecCol), col("__c"))
     emb.crossJoin(broadcast(centDF))
       .select(col(idCol), col(vecCol),
         struct(d.as("d"), col("__cid").as("cid")).as("__dc"))
@@ -311,13 +314,8 @@ object Similarity {
   def kmeansAssignCol(vecCol: String,
                       cents: Array[(Long, Array[Double])]): Column = {
     if (cents.isEmpty) return lit(null).cast("long")
-    val vecD = col(vecCol).cast("array<double>")
-    def sqDist(c: Array[Double]): Column =
-      aggregate(
-        zip_with(vecD, array(c.map(lit): _*), (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, x) => acc + x)
     val packed = cents.map { case (cid, c) =>
-      struct(sqDist(c).as("d"), lit(cid).as("cid"))
+      struct(sqDist(col(vecCol), array(c.map(lit): _*)).as("d"), lit(cid).as("cid"))
     }
     (if (packed.length == 1) packed.head else least(packed.toSeq: _*))
       .getField("cid")

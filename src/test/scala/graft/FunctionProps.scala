@@ -1,9 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
-import graft.functions.{OrderedBits, Shingles, SimHash64}
-import graft.operators.{Ops, TextOps}
+import graft.functions.{OrderedBits, RoundHalfUpDouble, Shingles, SimHash64}
+import graft.operators.{Ops, Similarity, TextOps}
 
 /** ScalaCheck properties for the native Catalyst expressions — each is
   * checked against an independent reference implementation (plain Scala or
@@ -16,6 +20,131 @@ object FunctionProps extends Properties("functions") {
 
   private lazy val spark = Sessions.local("4")
   import spark.implicits._
+
+  // ---- harness for the kernels that replace a built-in form -------------
+
+  /** `df` as a parquet scan: over a local relation the optimizer would
+    * evaluate the projection itself (ConvertToLocalRelation, interpreted
+    * and before any rewrite), so neither path under test would run. */
+  private def scanned(df: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("graft_props").resolve("t").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `f` under whole-stage codegen, then with every expression interpreted. */
+  private def bothPaths[A](f: => A): Seq[A] = Seq(
+    f,
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(f))
+
+  /** `f` with Spark's own `Round` over doubles: the rewrite excluded. */
+  private def builtinRound[A](f: => A): A =
+    withConf("spark.sql.optimizer.excludedRules" -> RoundHalfUpDouble.Rewrite.ruleName)(f)
+
+  /** A double's bits, with every NaN as the one canonical NaN: Java leaves
+    * a computed NaN's sign and payload unspecified (the JIT may swap the
+    * operands of `acc + x`), so the built-in form itself does not pin them;
+    * ±0.0 and every other value compare bit for bit. */
+  private def bits(d: Any): Any = d match {
+    case v: Double => java.lang.Double.doubleToLongBits(v)
+    case other => other
+  }
+
+  // ---- RoundHalfUpDouble vs Spark's BigDecimal Round ---------------------
+
+  private val roundEdges: Seq[Double] = Seq(0.0, -0.0, 0.5, -0.5, 1.5, -1.5, 2.5,
+    0.49999999999999994, -0.49999999999999994, Double.NaN,
+    Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue,
+    -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL / 3, Double.MaxValue,
+    Double.MinValue, 4503599627370496.0, -4503599627370497.0, 9007199254740993.0,
+    4503599627370495.5, -4503599627370495.5, 1e300, 0.3, -0.3, -0.7)
+
+  private val roundCase: Gen[Double] = Gen.oneOf(
+    Gen.choose(-1e6, 1e6),
+    // k + 0.5 and its neighbours one ulp either side
+    for (k <- Gen.choose(-(1L << 53), 1L << 53); side <- Gen.choose(-1, 1)) yield {
+      val h = k.toDouble + 0.5
+      if (side < 0) math.nextDown(h) else if (side > 0) math.nextUp(h) else h
+    },
+    Gen.long.map(java.lang.Double.longBitsToDouble),
+    Gen.oneOf(roundEdges))
+
+  property("round(double, 0) rewrite is bit-identical to Spark's Round") =
+    Prop.forAllNoShrink(Gen.listOfN(48, roundCase)) { xs =>
+      val t = scanned((roundEdges ++ xs).zipWithIndex.map { case (x, i) => (i, x) }
+        .toDF("i", "x"))
+      def run(): Seq[Any] = t.select(col("i"), round(col("x"), 0)).orderBy("i")
+        .collect().map(r => bits(r.get(1))).toSeq
+      val want = builtinRound(run())
+      val rewritten = t.select(round(col("x"), 0)).queryExecution.optimizedPlan
+        .expressions.exists(_.exists(_.isInstanceOf[RoundHalfUpDouble]))
+      rewritten && bothPaths(run()).forall(_ == want)
+    }
+
+  // ---- VectorFold vs aggregate(zip_with(...)) ----------------------------
+
+  private val elem: Gen[Option[Double]] = Gen.frequency(
+    12 -> Gen.choose(-4.0, 4.0).map(Some(_)),
+    1 -> Gen.const(None),
+    1 -> Gen.oneOf(Double.NaN, -0.0, 1e300).map(Some(_)))
+  private val vec: Gen[Option[Seq[Option[Double]]]] = Gen.frequency(
+    8 -> Gen.choose(3, 4).flatMap(Gen.listOfN(_, elem)).map(Some(_)),
+    1 -> Gen.const(Some(Nil)),
+    1 -> Gen.const(None))
+
+  private def hof(a: Column, b: Column, term: (Column, Column) => Column): Column =
+    aggregate(zip_with(a, b, (x, y) => term(x.cast("double"), y.cast("double"))),
+      lit(0.0), (acc, x) => acc + x)
+
+  property("dot and sqDist are bit-identical to aggregate(zip_with(...))") =
+    Prop.forAllNoShrink(Gen.listOfN(12, Gen.zip(vec, vec))) { rows =>
+      val t = scanned(rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+          .toDF("i", "a", "b"))
+        .withColumn("af", col("a").cast("array<float>"))
+        .withColumn("bf", col("b").cast("array<float>"))
+      val probe = array(lit(0.25), lit(-1.5), lit(3.0), lit(0.0))
+      val probeNull = array(lit(1.0), lit(null).cast("double"), lit(2.0))
+      val pairs: Seq[(Column, Column)] = Seq(col("a") -> col("b"), col("af") -> col("bf"),
+        col("af") -> col("b"), col("a") -> probe, probe -> col("af"), col("a") -> probeNull)
+      val folds: Seq[(Column, Column) => (Column, Column)] = Seq(
+        (a, b) => Similarity.dot(a, b) -> hof(a, b, _ * _),
+        (a, b) => Similarity.sqDist(a, b) -> hof(a, b, (x, y) => (x - y) * (x - y)))
+      val cols = for ((a, b) <- pairs; f <- folds) yield f(a, b)
+      def run(cs: Seq[Column]): Seq[Seq[Any]] =
+        t.select(col("i") +: cs: _*).orderBy("i").collect()
+          .map(r => (1 until r.length).map(k => bits(r.get(k)))).toSeq
+      val want = run(cols.map(_._2))
+      bothPaths(run(cols.map(_._1))).forall(_ == want)
+    }
+
+  // ---- collapse_ws vs trim(regexp_replace(c, "\\s+", " ")) ---------------
+
+  private val wsText: Gen[String] =
+    Gen.listOf(Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0", "\u2003",
+      "  ", "a", "Bé", "汉字", "x y", "\u001C", "😀"))
+      .map(_.mkString)
+
+  property("normalizeWs is byte-identical to trim(regexp_replace(...))") =
+    Prop.forAllNoShrink(Gen.listOfN(16, wsText)) { texts =>
+      val t = scanned(((texts ++ Seq(" \t\n\u000B\f\r ", "", null)).zipWithIndex
+        .map { case (s, i) => (i, s) }).toDF("i", "s"))
+      def run(c: Column): Seq[Option[Seq[Byte]]] =
+        t.select(col("i"), c).orderBy("i").collect()
+          .map(r => Option(r.getString(1)).map(_.getBytes("UTF-8").toSeq)).toSeq
+      val want = run(trim(regexp_replace(col("s"), "\\s+", " ")))
+      bothPaths(run(Ops.normalizeWs(col("s")))).forall(_ == want)
+    }
 
   // ---- OrderedBits: pure kernel, no Spark jobs needed -------------------
 

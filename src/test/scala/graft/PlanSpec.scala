@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.Round
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
 import org.apache.spark.sql.execution.{InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.DoubleType
 
 /** Physical-plan shape assertions — the properties that decide whether these
   * operators survive a 100× scale-up: filters reach the parquet scan,
@@ -226,6 +229,22 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("partial_sum") || p.contains("Functions [partial"), p)
     val exchanges = "hashpartitioning\\(".r.findAllIn(p).size
     assert(exchanges == 1, s"expected exactly 1 hash exchange, got $exchanges:\n$p")
+  }
+
+  test("perfbench scan kernels stay in generated code: no CodegenFallback, no Round(double)") {
+    // round(double, 0) is rewritten to RoundHalfUpDouble, the vector folds
+    // are VectorFold and normalizeWs is CollapseWs; a CodegenFallback (the
+    // zip_with/aggregate form) or Spark's BigDecimal Round over a double
+    // puts the per-row loop back outside the generated stage
+    for (name <- Seq("q_agg_pricing", "q_histogram", "q_kmeans_step", "q_dedup_survivorship")) {
+      val p = physical(Queries.all(name)(spark, SF))
+      val slow = p.collectWithSubqueries { case n => n.expressions }.flatten
+        .flatMap(_.collect {
+          case e: CodegenFallback => e
+          case r: Round if r.child.dataType == DoubleType => r
+        })
+      assert(slow.isEmpty, s"$name plans ${slow.mkString(", ")} outside codegen:\n$p")
+    }
   }
 
   test("q_ngram_counts: map-side-combined counts; ranking window is lang-partitioned") {
