@@ -11,10 +11,11 @@ import org.apache.spark.sql.types._
 /** Fused cosine similarity over two `array<float|double>` columns as a
   * native Catalyst expression with whole-stage codegen.
   *
-  * The higher-order-function formulation
-  * (`aggregate(zip_with(a,b,*), 0d, +)`, [[graft.operators.Similarity.cosine]])
-  * materializes an intermediate array per row and walks the vectors three
-  * times (dot, |a|, |b|); this expression emits ONE branch-free loop with no
+  * The built-in higher-order-function formulation
+  * (`aggregate(zip_with(a,b,*), 0d, +)`) runs interpreted, materializes an
+  * intermediate array per row and walks the vectors three times (dot, |a|,
+  * |b|); [[graft.operators.Similarity.cosine]] composes three
+  * [[VectorFold]] loops. This expression emits ONE branch-free loop with no
   * allocation, stays inside WholeStageCodegen, and is the hot-loop form a
   * 100 TB similarity scan wants. Interpreted eval is provided for
   * completeness (codegen is what runs in practice).

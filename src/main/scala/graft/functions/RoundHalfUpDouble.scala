@@ -38,25 +38,15 @@ case class RoundHalfUpDouble(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     RoundHalfUpDouble.compute(input.asInstanceOf[Double])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = ctx.freshName("a")
-    val f = ctx.freshName("f")
-    val r = ctx.freshName("r")
-    nullSafeCodeGen(ctx, ev, x =>
-      s"""
-         |final double $a = java.lang.Math.abs($x);
-         |final double $f = java.lang.Math.floor($a);
-         |final double $r = ($a - $f >= 0.5) ? $f + 1.0 : $f;
-         |${ev.value} = ($r == 0.0) ? 0.0 : java.lang.Math.copySign($r, $x);
-       """.stripMargin)
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, x => s"graft.functions.RoundHalfUpDouble.compute($x)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object RoundHalfUpDouble {
-  /** The kernel, for interpreted eval (generated code inlines it). */
+  /** The kernel, shared by interpreted eval and generated code. */
   def compute(x: Double): Double = {
     val a = math.abs(x)
     val f = math.floor(a)

@@ -20,10 +20,7 @@ import org.apache.spark.sql.types._
   * result is NaN in both, with the sign bit Java leaves unspecified. The HOF
   * form runs interpreted (`ZipWith` and `ArrayAggregate` are
   * `CodegenFallback`) and allocates the zipped array per row; this is one
-  * allocation-free loop inside the generated stage.
-  *
-  * A foldable side with no NULL element (a centroid or probe literal) is
-  * read once, at plan time, into a `double[]`, as [[CosineSim]] does. */
+  * allocation-free loop inside the generated stage. */
 case class VectorFold(left: Expression, right: Expression, op: VectorFold.Op)
     extends BinaryExpression {
 
@@ -45,20 +42,6 @@ case class VectorFold(left: Expression, right: Expression, op: VectorFold.Op)
   private def containsNull(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].containsNull
 
-  /** A foldable side evaluated once; `None` when the side is not
-    * foldable, folds to NULL or holds a NULL element (the generic loop
-    * handles those). */
-  private def baked(e: Expression): Option[Array[Double]] =
-    if (!e.foldable) None
-    else Option(e.eval(null)).map(_.asInstanceOf[ArrayData]).flatMap { ad =>
-      val get = VectorFold.element(e.dataType)
-      val n = ad.numElements()
-      if ((0 until n).exists(ad.isNullAt)) None
-      else Some(Array.tabulate(n)(get(ad, _)))
-    }
-
-  @transient private lazy val bakedRight = baked(right)
-  @transient private lazy val bakedLeft = if (bakedRight.isEmpty) baked(left) else None
   @transient private lazy val leftElement = VectorFold.element(left.dataType)
   @transient private lazy val rightElement = VectorFold.element(right.dataType)
 
@@ -85,18 +68,15 @@ case class VectorFold(left: Expression, right: Expression, op: VectorFold.Op)
       s"(double) $arr.${VectorFold.getter(side.dataType).get}($i)"
     def nullAt(arr: String, side: Expression): Option[String] =
       if (containsNull(side)) Some(s"$arr.isNullAt($i)") else None
-    /** The loop over `x` (of `xSide`) against `yLen` elements read by
-      * `yRead`; `yNull` tests an element of the other side for NULL. */
-    def loop(x: String, xSide: Expression, yLen: String, yRead: String,
-             yNull: Option[String], xIsLeft: Boolean): String = {
-      val nullTest = (nullAt(x, xSide).toSeq ++ yNull).mkString(" || ")
-      val (l, r) = if (xIsLeft) (read(x, xSide), yRead) else (yRead, read(x, xSide))
+    nullSafeCodeGen(ctx, ev, (x, y) => {
+      val nullTest = (nullAt(x, left) ++ nullAt(y, right)).mkString(" || ")
+      val term = op.gen(ctx, acc, read(x, left), read(y, right))
       val body =
-        if (nullTest.isEmpty) op.gen(ctx, acc, l, r)
-        else s"if ($nullTest) { ${ev.isNull} = true; break; }\n${op.gen(ctx, acc, l, r)}"
+        if (nullTest.isEmpty) term
+        else s"if ($nullTest) { ${ev.isNull} = true; break; }\n$term"
       s"""
          |final int $n = $x.numElements();
-         |if ($n != $yLen) {
+         |if ($n != $y.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
          |  double $acc = 0.0;
@@ -106,16 +86,6 @@ case class VectorFold(left: Expression, right: Expression, op: VectorFold.Op)
          |  ${ev.value} = $acc;
          |}
        """.stripMargin
-    }
-    def bakedLoop(x: String, xSide: Expression, p: Array[Double], xIsLeft: Boolean): String = {
-      val ref = ctx.addReferenceObj("vectorFoldBaked", p, "double[]")
-      loop(x, xSide, p.length.toString, s"$ref[$i]", None, xIsLeft)
-    }
-    nullSafeCodeGen(ctx, ev, (x, y) => (bakedRight, bakedLeft) match {
-      case (Some(p), _) => bakedLoop(x, left, p, xIsLeft = true)
-      case (_, Some(p)) => bakedLoop(y, right, p, xIsLeft = false)
-      case _ => loop(x, left, s"$y.numElements()", read(y, right), nullAt(y, right),
-        xIsLeft = true)
     })
   }
 

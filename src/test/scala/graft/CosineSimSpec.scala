@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSim.cosine_sim
-import graft.operators.Similarity
 
 class CosineSimSpec extends SparkSuite {
   import spark.implicits._
@@ -14,7 +13,7 @@ class CosineSimSpec extends SparkSuite {
         col("a.vec_id") === col("b.vec_id") + 1)
       .select(col("a.vec_id").as("id"),
         cosine_sim(col("a.embedding"), col("b.embedding")).as("native"),
-        Similarity.cosine(col("a.embedding"), col("b.embedding")).as("hof"))
+        HofVectors.cosine(col("a.embedding"), col("b.embedding")).as("hof"))
     val rows = pairs.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -88,9 +87,9 @@ class CosineSimSpec extends SparkSuite {
     }
     // warm both
     emb.select(sum(cosine_sim($"embedding", probeColF))).collect()
-    emb.select(sum(Similarity.cosine($"embedding", probeCol))).collect()
+    emb.select(sum(HofVectors.cosine($"embedding", probeCol))).collect()
     val tNative = time(emb.select(sum(cosine_sim($"embedding", probeColF))).collect())
-    val tHof = time(emb.select(sum(Similarity.cosine($"embedding", probeCol))).collect())
+    val tHof = time(emb.select(sum(HofVectors.cosine($"embedding", probeCol))).collect())
     info(f"native=$tNative%.1f ms hof=$tHof%.1f ms (5k vectors x 64 dims)")
     emb.unpersist()
   }

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Round}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
@@ -23,13 +27,17 @@ object FunctionProps extends Properties("functions") {
 
   // ---- harness for the kernels that replace a built-in form -------------
 
-  /** `df` as a parquet scan: over a local relation the optimizer would
-    * evaluate the projection itself (ConvertToLocalRelation, interpreted
-    * and before any rewrite), so neither path under test would run. */
-  private def scanned(df: DataFrame): DataFrame = {
-    val dir = Files.createTempDirectory("graft_props").resolve("t").toString
-    df.write.parquet(dir)
-    spark.read.parquet(dir)
+  /** `f` over `df` as a parquet scan, the files deleted afterwards: over a
+    * local relation the optimizer would evaluate the projection itself
+    * (ConvertToLocalRelation, interpreted and before any rewrite), so
+    * neither path under test would run. */
+  private def scanned[A](df: DataFrame)(f: DataFrame => A): A = {
+    val dir = Files.createTempDirectory("graft_props")
+    try {
+      val path = dir.resolve("t").toString
+      df.write.parquet(path)
+      f(spark.read.parquet(path))
+    } finally FileUtils.deleteDirectory(dir.toFile)
   }
 
   private def withConf[A](kv: (String, String)*)(f: => A): A = {
@@ -48,9 +56,23 @@ object FunctionProps extends Properties("functions") {
     withConf("spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(f))
 
-  /** `f` with Spark's own `Round` over doubles: the rewrite excluded. */
-  private def builtinRound[A](f: => A): A =
-    withConf("spark.sql.optimizer.excludedRules" -> RoundHalfUpDouble.Rewrite.ruleName)(f)
+  /** `q` collected with Spark's own `Round` over doubles: the rewrite
+    * excluded, and the plan checked to have kept `Round`, so the reference
+    * cannot silently come from the kernel under test. */
+  private def builtinRound(q: => DataFrame): Array[Row] =
+    withConf("spark.sql.optimizer.excludedRules" -> RoundHalfUpDouble.Rewrite.ruleName) {
+      val df = q
+      assert(plans[Round](df) && !plans[RoundHalfUpDouble](df),
+        s"reference plan lost Spark's Round:\n${df.queryExecution.optimizedPlan}")
+      df.collect()
+    }
+
+  /** Whether `df`'s optimized plan holds an expression of class `E`. */
+  private def plans[E <: Expression: ClassTag](df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+      case _: E => true
+      case _ => false
+    }))
 
   /** A double's bits, with every NaN as the one canonical NaN: Java leaves
     * a computed NaN's sign and payload unspecified (the JIT may swap the
@@ -82,14 +104,13 @@ object FunctionProps extends Properties("functions") {
 
   property("round(double, 0) rewrite is bit-identical to Spark's Round") =
     Prop.forAllNoShrink(Gen.listOfN(48, roundCase)) { xs =>
-      val t = scanned((roundEdges ++ xs).zipWithIndex.map { case (x, i) => (i, x) }
-        .toDF("i", "x"))
-      def run(): Seq[Any] = t.select(col("i"), round(col("x"), 0)).orderBy("i")
-        .collect().map(r => bits(r.get(1))).toSeq
-      val want = builtinRound(run())
-      val rewritten = t.select(round(col("x"), 0)).queryExecution.optimizedPlan
-        .expressions.exists(_.exists(_.isInstanceOf[RoundHalfUpDouble]))
-      rewritten && bothPaths(run()).forall(_ == want)
+      scanned((roundEdges ++ xs).zipWithIndex.map { case (x, i) => (i, x) }
+          .toDF("i", "x")) { t =>
+        def query = t.select(col("i"), round(col("x"), 0)).orderBy("i")
+        def bitsOf(rows: Array[Row]): Seq[Any] = rows.map(r => bits(r.get(1))).toSeq
+        val want = bitsOf(builtinRound(query))
+        plans[RoundHalfUpDouble](query) && bothPaths(bitsOf(query.collect())).forall(_ == want)
+      }
     }
 
   // ---- VectorFold vs aggregate(zip_with(...)) ----------------------------
@@ -103,29 +124,26 @@ object FunctionProps extends Properties("functions") {
     1 -> Gen.const(Some(Nil)),
     1 -> Gen.const(None))
 
-  private def hof(a: Column, b: Column, term: (Column, Column) => Column): Column =
-    aggregate(zip_with(a, b, (x, y) => term(x.cast("double"), y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
-
   property("dot and sqDist are bit-identical to aggregate(zip_with(...))") =
     Prop.forAllNoShrink(Gen.listOfN(12, Gen.zip(vec, vec))) { rows =>
-      val t = scanned(rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-          .toDF("i", "a", "b"))
-        .withColumn("af", col("a").cast("array<float>"))
-        .withColumn("bf", col("b").cast("array<float>"))
-      val probe = array(lit(0.25), lit(-1.5), lit(3.0), lit(0.0))
-      val probeNull = array(lit(1.0), lit(null).cast("double"), lit(2.0))
-      val pairs: Seq[(Column, Column)] = Seq(col("a") -> col("b"), col("af") -> col("bf"),
-        col("af") -> col("b"), col("a") -> probe, probe -> col("af"), col("a") -> probeNull)
-      val folds: Seq[(Column, Column) => (Column, Column)] = Seq(
-        (a, b) => Similarity.dot(a, b) -> hof(a, b, _ * _),
-        (a, b) => Similarity.sqDist(a, b) -> hof(a, b, (x, y) => (x - y) * (x - y)))
-      val cols = for ((a, b) <- pairs; f <- folds) yield f(a, b)
-      def run(cs: Seq[Column]): Seq[Seq[Any]] =
-        t.select(col("i") +: cs: _*).orderBy("i").collect()
-          .map(r => (1 until r.length).map(k => bits(r.get(k)))).toSeq
-      val want = run(cols.map(_._2))
-      bothPaths(run(cols.map(_._1))).forall(_ == want)
+      scanned(rows.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+          .toDF("i", "a", "b")) { scan =>
+        val t = scan.withColumn("af", col("a").cast("array<float>"))
+          .withColumn("bf", col("b").cast("array<float>"))
+        val probe = array(lit(0.25), lit(-1.5), lit(3.0), lit(0.0))
+        val probeNull = array(lit(1.0), lit(null).cast("double"), lit(2.0))
+        val pairs: Seq[(Column, Column)] = Seq(col("a") -> col("b"), col("af") -> col("bf"),
+          col("af") -> col("b"), col("a") -> probe, probe -> col("af"), col("a") -> probeNull)
+        val folds: Seq[(Column, Column) => (Column, Column)] = Seq(
+          (a, b) => Similarity.dot(a, b) -> HofVectors.dot(a, b),
+          (a, b) => Similarity.sqDist(a, b) -> HofVectors.fold(a, b, (x, y) => (x - y) * (x - y)))
+        val cols = for ((a, b) <- pairs; f <- folds) yield f(a, b)
+        def run(cs: Seq[Column]): Seq[Seq[Any]] =
+          t.select(col("i") +: cs: _*).orderBy("i").collect()
+            .map(r => (1 until r.length).map(k => bits(r.get(k)))).toSeq
+        val want = run(cols.map(_._2))
+        bothPaths(run(cols.map(_._1))).forall(_ == want)
+      }
     }
 
   // ---- collapse_ws vs trim(regexp_replace(c, "\\s+", " ")) ---------------
@@ -137,13 +155,14 @@ object FunctionProps extends Properties("functions") {
 
   property("normalizeWs is byte-identical to trim(regexp_replace(...))") =
     Prop.forAllNoShrink(Gen.listOfN(16, wsText)) { texts =>
-      val t = scanned(((texts ++ Seq(" \t\n\u000B\f\r ", "", null)).zipWithIndex
-        .map { case (s, i) => (i, s) }).toDF("i", "s"))
-      def run(c: Column): Seq[Option[Seq[Byte]]] =
-        t.select(col("i"), c).orderBy("i").collect()
-          .map(r => Option(r.getString(1)).map(_.getBytes("UTF-8").toSeq)).toSeq
-      val want = run(trim(regexp_replace(col("s"), "\\s+", " ")))
-      bothPaths(run(Ops.normalizeWs(col("s")))).forall(_ == want)
+      scanned(((texts ++ Seq(" \t\n\u000B\f\r ", "", null)).zipWithIndex
+          .map { case (s, i) => (i, s) }).toDF("i", "s")) { t =>
+        def run(c: Column): Seq[Option[Seq[Byte]]] =
+          t.select(col("i"), c).orderBy("i").collect()
+            .map(r => Option(r.getString(1)).map(_.getBytes("UTF-8").toSeq)).toSeq
+        val want = run(trim(regexp_replace(col("s"), "\\s+", " ")))
+        bothPaths(run(Ops.normalizeWs(col("s")))).forall(_ == want)
+      }
     }
 
   // ---- OrderedBits: pure kernel, no Spark jobs needed -------------------
