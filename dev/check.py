@@ -60,7 +60,6 @@ def main(sf_dir: str, out_dir: str) -> int:
                                    f"spark={spark.iloc[i].to_dict()} oracle={oracle.iloc[i].to_dict()}"))
             continue
         print(f"  OK {name} ({len(oracle)} rows)")
-    declared_only = set(json.load(open(f"{out_dir}/oracle_sql.json")))
     print(f"\n{len(oracles) - len(failures)}/{len(oracles)} oracle queries match")
     for name, why in failures:
         print(f"FAIL {name}: {why}")

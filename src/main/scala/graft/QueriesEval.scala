@@ -398,9 +398,8 @@ private[graft] trait QueriesEval { this: Queries.type =>
     // fingerprinting the self-joined edge set), so a DirConf left set
     // across two fixtures throws here instead of resuming the wrong run.
     val resumeDir = IterResume.dir(s, "pagerank")
-    resumeDir.foreach(rd => IterResume.checkOrInit(s, rd, IterResume.descriptor(
-      "pagerank", s"cap=$PrCap",
-      Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))))
+    resumeDir.foreach(rd => IterResume.checkOrInit(s, rd,
+      IterResume.descriptor("pagerank", s"cap=$PrCap", coPurchaseRows(s, d))))
     // ONE materialization of the edge set (r16, guide §2.4): exchange reuse
     // does not span executions, so the emptiness probe, the round-0 rank
     // build and the symDeg cut each re-ran the 3-shuffle co-purchase build
@@ -413,11 +412,7 @@ private[graft] trait QueriesEval { this: Queries.type =>
       return (rows.toDF("round", "n_nodes", "sum_rank_ppm", "max_delta_ppm",
         "converged"), 0)
     }
-    // Degree census from the checkpointed edges, one scan (explode, not a
-    // two-scan unionAll — same rows, half the reads).
-    val deg = e
-      .select(explode(array(col("pa"), col("pb"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    val deg = Graph.degrees(e, "pa", "pb")
     // Probe resume FIRST (ADVICE r15): on a resumed run the round-0 rank
     // build is dead work and its eager truncate would strand checkpoint
     // blocks; build it only when no committed round exists. symDeg is
@@ -427,9 +422,7 @@ private[graft] trait QueriesEval { this: Queries.type =>
     var symDegCache: DataFrame = null
     def symDeg: DataFrame = {
       if (symDegCache == null) symDegCache = Checkpoints.truncate(
-        e.select(col("pa").as("src"), col("pb").as("dst"))
-          .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-          .join(deg.withColumnRenamed("n", "src"), Seq("src")))
+        Graph.symmetric(e, "pa", "pb").join(deg.withColumnRenamed("n", "src"), Seq("src")))
       symDegCache
     }
     var trace = Vector.empty[(Long, Long, Long, Long, Long)]
@@ -556,14 +549,11 @@ private[graft] trait QueriesEval { this: Queries.type =>
   def qAssortativity(s: SparkSession, d: String): DataFrame = {
     val (e, deg) = coPurchaseGraph(s, d)
     val dec = "CAST(%s AS DECIMAL(38,0))"
-    // r17 (guide §2.3/§2.4): the symmetric-edge expansion is ALGEBRAIC, not
-    // physical — over sym each undirected edge contributes (da,db) AND
-    // (db,da), so m2 = 2·|e|, sx = sy = Σ(da+db), sxx = syy = Σ(da²+db²),
+    // The symmetric-edge expansion is ALGEBRAIC, not physical: over the
+    // symmetric edges each undirected edge contributes (da,db) AND (db,da),
+    // so m2 = 2·|e|, sx = sy = Σ(da+db), sxx = syy = Σ(da²+db²),
     // sxy = 2·Σ(da·db). Joining deg onto e ONCE computes the identical
-    // integer moments with half the join rows and one fewer e build (e is
-    // declarative; the old sym unionAll re-executed the 3-shuffle edge
-    // build twice — zero runtime stage reuse). Downstream expressions
-    // unchanged; oracle re-proves equality.
+    // integer moments with half the join rows and no symmetric expansion.
     e
       .join(deg.select(col("n").as("pa"), col("d").as("x")), Seq("pa"))
       .join(deg.select(col("n").as("pb"), col("d").as("y")), Seq("pb"))
@@ -632,20 +622,17 @@ private[graft] trait QueriesEval { this: Queries.type =>
     * baskets dilute item supports as the corpus grows and a fixed floor
     * would empty the readout at scale. */
   def qRuleConfidence(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("k"), col("l_partkey").as("p")).distinct()
-    val nOrders = op.select(col("k")).distinct().agg(count(lit(1)).as("nn"))
-    val item = op.groupBy(col("p")).agg(count(lit(1)).as("np"))
-    val pair = op.as("a").join(op.as("b"), expr("a.k = b.k AND a.p < b.p"))
-      .groupBy(col("a.p").as("i"), col("b.p").as("j"))
-      .agg(count(lit(1)).as("n_ij"))
-      .where(col("n_ij") >= 5L)
+    val op = coPurchaseRows(s, d).distinct()
+    val nOrders = op.select(col("l_orderkey")).distinct().agg(count(lit(1)).as("nn"))
+    val item = op.groupBy(col("l_partkey").as("p")).agg(count(lit(1)).as("np"))
+    val pair = Graph.coOccurrence(coPurchaseRows(s, d), "l_orderkey", "l_partkey", 5)
+      .select(col("pa").as("i"), col("pb").as("j"), col("c").as("n_ij"))
     // r17 note: explode-struct rule emission (one census pass) plus a
     // truncate of the item census were tried and measured WORSE together
     // (1.80 → 2.61 s quiet min-of-4): the duplicated declarative branches
     // schedule as CONCURRENT stages over idle cores, while the eager
     // truncate serializes the whole census into a blocking step. Kept
-    // declarative — same lesson as the coPurchaseGraph experiment.
+    // declarative.
     val rules = pair.select(col("i"), col("j"), col("n_ij"))
       .unionAll(pair.select(col("j").as("i"), col("i").as("j"), col("n_ij")))
     rules

@@ -621,20 +621,16 @@ private[graft] trait QueriesPrep { this: Queries.type =>
 
   /** Market-basket affinity: top-20 part pairs co-purchased within an
     * order, ranked by integer lift `(c_xy · n_orders · 10⁴) div (c_x·c_y)`
-    * at min support 5. The pair expansion is the within-order self-join of
-    * DISTINCT (order, part) — bounded by order size (≤ 7 lineitems), so
+    * at min support 5. The pair expansion is [[Graph.coOccurrence]] over
+    * the co-purchase rows — bounded by order size (≤ 7 lineitems), so
     * pairs grow linearly with orders, never quadratically with parts; the
     * per-part counts broadcast back onto the pair aggregate. */
   def qPartAffinity(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")).distinct()
+    val op = coPurchaseRows(s, d).distinct()
     val cnt = op.groupBy(col("l_partkey")).agg(count(lit(1)).as("c1"))
     val tot = op.select(col("l_orderkey")).distinct().agg(count(lit(1)).as("n_orders"))
-    op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
-      .agg(count(lit(1)).as("c_xy"))
-      .where(col("c_xy") >= 5)
+    Graph.coOccurrence(coPurchaseRows(s, d), "l_orderkey", "l_partkey", 5)
+      .select(col("pa").as("part_a"), col("pb").as("part_b"), col("c").as("c_xy"))
       .join(broadcast(cnt.select(col("l_partkey").as("part_a"), col("c1").as("cx"))), Seq("part_a"))
       .join(broadcast(cnt.select(col("l_partkey").as("part_b"), col("c1").as("cy"))), Seq("part_b"))
       .crossJoin(broadcast(tot))
@@ -935,46 +931,34 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * is enumerated exactly once. The oracle states the naive canonical
     * a<b<c triple join; both must produce the identical top-20. */
   def qTriangleCount(s: SparkSession, d: String): DataFrame = {
-    val (e, _) = coPurchaseGraph(s, d)
-    coPurchaseTriangles(e)
+    val (e, deg) = coPurchaseGraph(s, d)
+    coPurchaseTriangles(e, deg)
       .select(explode(array(col("w"), col("u"), col("v"))).as("l_partkey"))
       .groupBy("l_partkey").agg(count(lit(1)).as("n_tri"))
       .orderBy(col("n_tri").desc, col("l_partkey"))
       .limit(20)
   }
 
+  /** The (order, part) lineitem rows the co-purchase graph is built from;
+    * the resumable graph loops fingerprint these same rows. */
+  private[graft] def coPurchaseRows(s: SparkSession, d: String): DataFrame =
+    Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
+
   /** The co-purchase graph shared by the graph-analytics queries: an edge
     * joins two parts that co-occur in ≥2 orders (canonical pa < pb), plus
-    * the per-node degree table. Edge build is one self-equi-join under the
-    * order key (expansion bounded by order size), never a cross join. */
+    * the per-node degree table `(n, d)`. */
   private[graft] def coPurchaseGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2).select("pa", "pb")
-    // degree census via explode(array(pa, pb)) — ONE pass over e instead of
-    // the two-scan unionAll (r17; same rewrite r16 applied inside
-    // pagerankTrace — e is declarative, so every textual reference
-    // re-executes its 3-shuffle build: executed plans show zero runtime
-    // stage reuse at sf0.1)
-    val deg = e.select(explode(array(col("pa"), col("pb"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    (e, deg)
+    val e = Graph.coOccurrence(coPurchaseRows(s, d), "l_orderkey", "l_partkey", 2)
+      .select("pa", "pb")
+    (e, Graph.degrees(e, "pa", "pb"))
   }
-
 
   /** Triangle enumeration via degree-ordered orientation (each edge points
     * low→high degree, so out-degree is O(√m) and the wedge join is
     * skew-proof); emits each triangle once as (w, u, v). The wedge side is
-    * equi-joined back to the edge set — never a cartesian. */
-  private[graft] def coPurchaseTriangles(e: DataFrame): DataFrame = {
-    // one-scan degree census (see coPurchaseGraph) — halves the e builds
-    val deg = e.select(explode(array(col("pa"), col("pb"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("d"))
+    * equi-joined back to the edge set — never a cartesian. `deg` is `e`'s
+    * degree table, as [[coPurchaseGraph]] returns it. */
+  private[graft] def coPurchaseTriangles(e: DataFrame, deg: DataFrame): DataFrame = {
     val oriented = e
       .join(deg.select(col("n").as("pa"), col("d").as("da")), Seq("pa"))
       .join(deg.select(col("n").as("pb"), col("d").as("db")), Seq("pb"))
@@ -1603,25 +1587,9 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * discipline. Headroom: 85·Σcontrib ≤ 85·deg·10⁶ < 2⁶³ up to 10¹¹
     * neighbors per node. */
   def qPagerankStep(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2).select("pa", "pb")
-    // r17 note: a one-pass explode-struct symmetric expansion was tried
-    // here and A/B'd within host noise both ways (±0.3 s across JVM runs)
-    // — the two unionAll branches schedule as concurrent independent
-    // stages across the idle cores, so the duplicated edge build costs no
-    // wall at this scale, while the explode adds a generator row per edge.
-    // Kept declarative (no measured win to justify the churn).
-    val sym = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-    val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    sym.join(deg, Seq("src"))
-      .select(col("dst"), expr("1000000 div deg").as("contrib"))
+    val (e, deg) = coPurchaseGraph(s, d)
+    Graph.symmetric(e, "pa", "pb").join(deg.withColumnRenamed("n", "src"), Seq("src"))
+      .select(col("dst"), expr("1000000 div d").as("contrib"))
       .groupBy(col("dst")).agg(sum(col("contrib")).as("sc"))
       .select(col("dst").as("l_partkey"),
         (lit(150000L) + expr("(85 * sc) div 100")).as("rank_ppm"))
@@ -1638,18 +1606,7 @@ private[graft] trait QueriesPrep { this: Queries.type =>
     * driver state. Iterating = looping this plan with localCheckpoint,
     * the minhash-CC discipline. */
   def qLabelProp(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2).select("pa", "pb")
-    // r17 note: one-pass explode-struct expansion A/B'd within noise here
-    // too — see qPagerankStep. Kept declarative.
-    val sym = e.select(col("pa").as("src"), col("pb").as("dst"))
-      .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
+    val sym = Graph.symmetric(coPurchaseGraph(s, d)._1, "pa", "pb")
     val lbl = Tables.part(s, d).select(col("p_partkey"), col("p_brand"))
     val votes = sym
       .join(broadcast(lbl.select(col("p_partkey").as("src"),

@@ -123,7 +123,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     * partkey) total order. Oracle = naive triple-join enumeration. */
   def qClusteringCoeff(s: SparkSession, d: String): DataFrame = {
     val (e, deg) = coPurchaseGraph(s, d)
-    val triPerNode = coPurchaseTriangles(e)
+    val triPerNode = coPurchaseTriangles(e, deg)
       .select(explode(array(col("w"), col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("n_tri"))
     deg.where(col("d") >= 2)
@@ -300,16 +300,6 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
   private[graft] def kcoreTrace(s: SparkSession, d: String): (DataFrame, Int) = {
     import s.implicits._
     val (e0, _) = coPurchaseGraph(s, d)
-    // Degree census in ONE scan of the edge frame (explode, not the
-    // two-scan unionAll — same rows, half the reads).
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("pa"), col("pb"))).as("n"))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-    def observedCount(obs: org.apache.spark.sql.Observation): Long =
-      obs.get.getOrElse("n", 0L) match {
-        case null => 0L
-        case x => x.asInstanceOf[Long]
-      }
     // ONE materialization of the edge build (r16, guide §2.4): the old
     // pre-loop `e0.isEmpty` probe re-ran the full 3-shuffle co-purchase
     // build as its own execution before the checkpoint did it again. The
@@ -334,9 +324,9 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
     // boards.
     def truncDeg(edges: DataFrame): (DataFrame, Long) = {
       val obs = org.apache.spark.sql.Observation()
-      val dg = degrees(edges).observe(obs, count(lit(1)).as("n"))
+      val dg = Graph.degrees(edges, "pa", "pb").observe(obs, count(lit(1)).as("n"))
         .transform(Checkpoints.truncate)
-      (dg, observedCount(obs))
+      (dg, Checkpoints.observedLong(obs, "n"))
     }
     var (deg, _) = truncDeg(e)
     var trace = Vector.empty[(Long, Long, Long, Long)]
@@ -351,7 +341,7 @@ private[graft] trait QueriesRetrieval { this: Queries.type =>
         .select("pa", "pb")
         .observe(obs, count(lit(1)).as("n"))
         .transform(Checkpoints.truncate)
-      val nEdges = observedCount(obs)
+      val nEdges = Checkpoints.observedLong(obs, "n")
       if (nEdges == 0L) {
         // Prunes-to-empty short-circuit (ADVICE r16): an empty edge set
         // stays empty, so this round is (0, 0) and the NEXT round — if the

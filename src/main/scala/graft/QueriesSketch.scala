@@ -47,15 +47,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     * quadratic in component size and only viable at oracle scale, which
     * is exactly the point of shipping the relational-iteration form. */
   def qGraphComponents(s: SparkSession, d: String): DataFrame = {
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2).select("pa", "pb")
-    val cc = Graph.connectedComponents(e, "pa", "pb")
+    val cc = Graph.connectedComponents(coPurchaseGraph(s, d)._1, "pa", "pb")
     val sizes = cc.groupBy("component").agg(count(lit(1)).as("csize"))
     cc.join(sizes, Seq("component"))
       .select(col("node").as("l_partkey"), col("component"), col("csize"))
@@ -201,29 +193,14 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     // cheaper than fingerprinting the self-joined edge set).
     val resumeDir = graft.operators.IterResume.dir(s, "bfs")
     resumeDir.foreach(rd => graft.operators.IterResume.checkOrInit(s, rd,
-      graft.operators.IterResume.descriptor("bfs", "cap=15",
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")))))
+      graft.operators.IterResume.descriptor("bfs", "cap=15", coPurchaseRows(s, d))))
     val resumed = resumeDir.flatMap(graft.operators.IterResume.resume(s, _))
-    val op = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey")).distinct()
-    val e = op.as("a")
-      .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
-        col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("c"))
-      .where(col("c") >= 2).select("pa", "pb")
     // sym feeds the loop AND (on fresh runs) the seed/round-0 build; a
     // fully-converged resume needs neither, so it is built on demand.
     var symCache: DataFrame = null
     def sym: DataFrame = {
-      // one-pass symmetric expansion (r17): e is declarative here, and the
-      // two-scan unionAll re-ran the whole 3-shuffle edge build twice
-      // inside this single truncate
       if (symCache == null) symCache = Checkpoints.truncate(
-        e.select(explode(array(
-            struct(col("pa").as("src"), col("pb").as("dst")),
-            struct(col("pb").as("src"), col("pa").as("dst")))).as("ed"))
-          .select(col("ed.src").as("src"), col("ed.dst").as("dst")))
+        Graph.symmetric(coPurchaseGraph(s, d)._1, "pa", "pb"))
       symCache
     }
     var dist: DataFrame = null
@@ -281,10 +258,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
         case Some(rd) => graft.operators.IterResume.commitState(next0, rd, iter + 1)
         case None     => Checkpoints.truncate(next0)
       }
-      changed = obs.get.getOrElse("changed", 0L) match {
-        case null => 0L
-        case x => x.asInstanceOf[Long]
-      }
+      changed = Checkpoints.observedLong(obs, "changed")
       dist.unpersist()
       dist = next
       iter += 1

@@ -733,16 +733,10 @@ private[graft] trait QueriesStats { this: Queries.type =>
     * exactly; neighborhood sizes count capped-eligible neighbors,
     * consistent with the common count. */
   def qLinkPredict(s: SparkSession, d: String): DataFrame = {
-    val (e, _) = coPurchaseGraph(s, d)
-    // one-pass symmetric adjacency (explode of both directions) instead of
-    // the two-scan unionAll (r17, guide §2.4 — e re-executes per reference)
-    val adj = e.select(explode(array(
-        struct(col("pa").as("w"), col("pb").as("x")),
-        struct(col("pb").as("w"), col("pa").as("x")))).as("ed"))
-      .select(col("ed.w").as("w"), col("ed.x").as("x"))
+    val (e, deg) = coPurchaseGraph(s, d)
+    val adj = Graph.symmetric(e, "pa", "pb").toDF("w", "x")
     val eligible = adj.join(
-      adj.groupBy("w").agg(count(lit(1)).as("dw")).where(col("dw") <= 50)
-        .select("w"), "w")
+      deg.where(col("d") <= 50).select(col("n").as("w")), "w")
     val degc = eligible.groupBy("x").agg(count(lit(1)).as("degc"))
     eligible.as("a").join(eligible.as("b"),
         col("a.w") === col("b.w") && col("a.x") < col("b.x"))

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** Lineage-truncation policy for the iterative operators
-  * ([[Graph.connectedComponents]], [[Graph.bfsLevels]],
+  * ([[Graph.connectedComponents]], the BFS loop in `qBfsLevels`,
   * [[TextOps.lshDedupClusters]], the k-core fixpoint) plus the release
   * path for the blocks they leave behind.
   *
@@ -56,6 +56,16 @@ object Checkpoints {
         df.localCheckpoint()
     }
   }
+
+  /** The Long metric `name` of `obs`, blocking until the observed action
+    * reports. A missing or null metric reads as 0: a `sum` over no rows
+    * is null, and AQE can drop the `CollectMetrics` node on an empty
+    * plan. */
+  def observedLong(obs: Observation, name: String): Long =
+    obs.get.getOrElse(name, 0L) match {
+      case null => 0L
+      case x => x.asInstanceOf[Long]
+    }
 
   /** Drop all persisted RDD blocks (non-blocking) and, on the durable
     * tier, reclaim the per-round checkpoint directories. Safe only when

@@ -8,8 +8,59 @@ import org.apache.spark.sql.functions._
   * adjacency structure. The reference delegates all graph-shaped
   * analytics to its warehouse tier (SURVEY.md §3.3); these are the
   * Spark-native equivalents.
+  *
+  * Three building blocks every graph query composes, each defined once:
+  *  - [[coOccurrence]]: the undirected edge build — item pairs that share
+  *    at least `minSupport` baskets;
+  *  - [[symmetric]]: both directions of every edge, in one scan;
+  *  - [[degrees]]: the per-node degree census, in one scan.
   */
 object Graph {
+
+  /** Co-occurrence edges: item pairs `(pa, pb)` with `pa < pb` that share
+    * at least `minSupport` distinct baskets, with their shared-basket
+    * count `c`. A duplicated `(basket, item)` row counts once. The pair
+    * expansion is one self-equi-join of the distinct rows under the
+    * basket key — bounded by basket size, never a cross join. */
+  def coOccurrence(rows: DataFrame, basket: String, item: String,
+                   minSupport: Int): DataFrame = {
+    val bi = rows.select(col(basket), col(item)).distinct()
+    bi.as("a")
+      .join(bi.as("b"), col(s"a.$basket") === col(s"b.$basket") &&
+        col(s"a.$item") < col(s"b.$item"))
+      .groupBy(col(s"a.$item").as("pa"), col(s"b.$item").as("pb"))
+      .agg(count(lit(1)).as("c"))
+      .where(col("c") >= minSupport)
+  }
+
+  /** Both directions of every edge of `e` as `(src, dst)`, from ONE scan:
+    * an `explode` of the two directed structs per edge row. Never the
+    * two-branch `unionAll` form: `e` is declarative, so each textual
+    * reference to it re-runs its whole build (for [[coOccurrence]], three
+    * shuffles), and executed plans show no runtime stage reuse between
+    * the two branches.
+    *
+    * An edge with a null endpoint names no node and is dropped. The
+    * filter sits after the explode on purpose: a generator's output
+    * carries none of its input's constraints, and a checkpoint of this
+    * frame keeps the constraints it was planned with. Without the
+    * non-null ones, a self-join over the checkpointed frame (the
+    * pointer jump in [[connectedComponents]]) infers a null filter on
+    * one side only, the two sides stop sharing their exchange, and each
+    * round runs the neighbor aggregate twice. */
+  def symmetric(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(explode(array(
+        struct(col(a).as("src"), col(b).as("dst")),
+        struct(col(b).as("src"), col(a).as("dst")))).as("ed"))
+      .select(col("ed.src").as("src"), col("ed.dst").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+
+  /** Per-node degree `(n, d)` of the undirected edge list `e`: one
+    * `explode(array(a, b))` scan and one map-side-combinable count —
+    * equal to [[symmetric]]'s per-`src` count without building it. */
+  def degrees(e: DataFrame, a: String, b: String): DataFrame =
+    e.select(explode(array(col(a), col(b))).as("n"))
+      .groupBy("n").agg(count(lit(1)).as("d"))
 
   /** Exact connected components by min-label propagation with pointer
     * jumping, over an undirected edge list. Per round: every node takes
@@ -63,8 +114,7 @@ object Graph {
     val resumed = resumeDir.flatMap(IterResume.resume(spark, _))
     var symCache: DataFrame = null
     def sym: DataFrame = {
-      if (symCache == null) symCache = Checkpoints.truncate(
-        src.unionAll(src.select(col("dst").as("src"), col("src").as("dst"))))
+      if (symCache == null) symCache = Checkpoints.truncate(symmetric(src, "src", "dst"))
       symCache
     }
     var labels: DataFrame = null
@@ -127,10 +177,7 @@ object Graph {
         case Some(rd) => IterResume.commitState(next0, rd, iter + 1)
         case None     => Checkpoints.truncate(next0)
       }
-      changed = obs.get.getOrElse("changed", 0L) match {
-        case null => 0L
-        case x => x.asInstanceOf[Long]
-      }
+      changed = Checkpoints.observedLong(obs, "changed")
       labels.unpersist()
       labels = next
       iter += 1

@@ -465,10 +465,7 @@ object TextOps {
         case Some(rd) => IterResume.commitState(next0, rd, iter + 1)
         case None     => Checkpoints.truncate(next0)
       }
-      changed = obs.get.getOrElse("changed", 0L) match {
-        case null => 0L
-        case x => x.asInstanceOf[Long]
-      }
+      changed = Checkpoints.observedLong(obs, "changed")
       labels.unpersist() // release the superseded round's checkpoint blocks
       labels = next
       iter += 1

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Checkpoints, Graph}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, IsNotNull}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSuite {
@@ -12,6 +13,64 @@ class GraphSpec extends SparkSuite {
     val out = cc.as[(Long, Long)].collect().toMap
     cc.unpersist()
     out
+  }
+
+  // baskets 1..4: {10,20,30}, {10,20} (its (2, 20) row duplicated),
+  // {20,30,40}, {50} alone
+  private val baskets = Seq(
+    (1L, 10L), (1L, 20L), (1L, 30L),
+    (2L, 10L), (2L, 20L), (2L, 20L),
+    (3L, 20L), (3L, 30L), (3L, 40L),
+    (4L, 50L))
+
+  private def pairs(minSupport: Int, rows: Seq[(Long, Long)] = baskets): Map[(Long, Long), Long] =
+    Graph.coOccurrence(rows.toDF("basket", "item"), "basket", "item", minSupport)
+      .as[(Long, Long, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
+
+  test("coOccurrence: distinct baskets counted, canonical pairs, support cut inclusive") {
+    // the duplicated (2, 20) row counts once: (10, 20) shares baskets 1 and 2
+    val all = pairs(1)
+    assert(all == Map((10L, 20L) -> 2L, (10L, 30L) -> 1L, (20L, 30L) -> 2L,
+      (20L, 40L) -> 1L, (30L, 40L) -> 1L), all.toString)
+    assert(all.keys.forall { case (a, b) => a < b }, s"pairs must be canonical: $all")
+    // item 50 is alone in its basket: no edge touches it
+    assert(!all.keys.exists { case (a, b) => a == 50L || b == 50L }, all.toString)
+    // a pair at exactly minSupport is kept; at minSupport − 1 it is dropped
+    assert(pairs(2) == Map((10L, 20L) -> 2L, (20L, 30L) -> 2L))
+    assert(pairs(3).isEmpty)
+  }
+
+  test("symmetric emits both directions; degrees equal its per-src count") {
+    val e = Seq((10L, 20L), (10L, 30L), (20L, 30L), (20L, 40L)).toDF("pa", "pb")
+    val sym = Graph.symmetric(e, "pa", "pb").as[(Long, Long)].collect().toSeq
+    val want = Seq((10L, 20L), (10L, 30L), (20L, 30L), (20L, 40L))
+      .flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    assert(sym.sorted == want.sorted, sym.toString)
+    val deg = Graph.degrees(e, "pa", "pb").as[(Long, Long)].collect().toMap
+    val symDeg = sym.groupBy(_._1).map { case (n, out) => n -> out.size.toLong }
+    assert(deg == symDeg, s"degrees=$deg symmetric per-src=$symDeg")
+    assert(deg == Map(10L -> 2L, 20L -> 3L, 30L -> 2L, 40L -> 1L))
+  }
+
+  test("a checkpointed symmetric frame keeps its endpoints' non-null constraints") {
+    // nullable endpoints, proven non-null only by a filter: the explode alone
+    // would drop that proof, and connectedComponents' pointer-jump self-join
+    // would stop sharing its exchange
+    val e = Seq((Some(1L), Some(2L)), (Some(2L), Some(3L))).toDF("pa", "pb")
+      .where(col("pa").isNotNull && col("pb").isNotNull)
+    val sym = Checkpoints.truncate(Graph.symmetric(e, "pa", "pb"))
+    val notNull = sym.queryExecution.optimizedPlan.constraints.collect {
+      case IsNotNull(a: Attribute) => a.name
+    }
+    assert(notNull == Set("src", "dst"), notNull.toString)
+    sym.unpersist()
+  }
+
+  test("coOccurrence, symmetric and degrees: empty input gives empty output") {
+    assert(pairs(1, Seq.empty).isEmpty)
+    val e = Seq.empty[(Long, Long)].toDF("pa", "pb")
+    assert(Graph.symmetric(e, "pa", "pb").collect().isEmpty)
+    assert(Graph.degrees(e, "pa", "pb").collect().isEmpty)
   }
 
   test("connectedComponents: two triangles + bridge node, singleton edge") {
